@@ -12,8 +12,9 @@ as idiomatic distributed Spark DataFrame programs:
 - FOG's .attr write-back     -> per-superstep checkpoints with lineage
 
 Nothing in this package is a translation of the reference's C++; all
-physical strategy is Spark-first (Catalyst, AQE, Arrow-vectorized
-pandas UDFs for the CSR kernel path).
+physical strategy is Spark-first (Catalyst, AQE; Arrow-vectorized
+pandas UDFs only where SQL can't express the kernel, e.g. the walk
+alias tables and the multimodal decoders).
 """
 
 __version__ = "0.1.0"

@@ -36,12 +36,10 @@ the classic ANF curve N(r) used for effective-diameter estimation.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 from fog_spark.datapipe.sketches import _KMV_BITS, _kmv_hash
-from fog_spark.engine.superstep import materialize, materialize_observed, vertices_of
+from fog_spark.engine.superstep import SuperstepLoop, materialize, materialize_observed, vertices_of
 
 
 def _merged_bottom_k(k: int):
@@ -114,32 +112,26 @@ def neighborhood_sketches(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    state = vertices_of(fwd).select(
-        "id", F.array(_kmv_hash(F.col("id"))).alias("hvs")
-    )
+    with SuperstepLoop(ctx, radius) as loop:
+        state = loop.state
+        if state is None:
+            state = materialize(
+                vertices_of(fwd).select("id", F.array(_kmv_hash(F.col("id"))).alias("hvs")), ctx, 0
+            )
 
-    start = 0
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(radius)
-        if rp is not None:
-            start, state = rp
-    if start == 0:
-        state = materialize(state, ctx, 0)
+        def step(state, r, prev):
+            contrib = fwd.join(state, fwd["dst"] == state["id"]).select(
+                fwd["src"].alias("id"), "hvs"
+            )
+            merged = _bounded_bottom_k_merge(state.unionByName(contrib), k)
+            # total sketch mass rides the materialize job: the ANF curve
+            # N(r) ~ Σ_v |sketch| saturates exactly when the balls do
+            state, om = materialize_observed(
+                merged, [F.sum(F.size("hvs")).alias("mass")], ctx, r
+            )
+            return state, {"active": int(om["mass"] or 0), "delta": None}
 
-    for r in range(start + 1, radius + 1):
-        t0 = time.time()
-        contrib = fwd.join(state, fwd["dst"] == state["id"]).select(
-            fwd["src"].alias("id"), "hvs"
-        )
-        merged = _bounded_bottom_k_merge(state.unionByName(contrib), k)
-        # total sketch mass rides the materialize job: the ANF curve
-        # N(r) ~ Σ_v |sketch| saturates exactly when the balls do
-        state, om = materialize_observed(
-            merged, [F.sum(F.size("hvs")).alias("mass")], ctx, r
-        )
-        if ctx is not None:
-            ctx.commit(r, active=int(om["mass"] or 0), delta=None,
-                       wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
+        state, _ = loop.run(state, step)
     return state
 
 

@@ -24,16 +24,16 @@ Scale hygiene:
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
 from fog_spark.engine.skew import HUB_DEGREE_THRESHOLD, HUB_FLAG, pick_hub_keys, skewed_gather, tag_hubs, top_degree_keys
 from fog_spark.engine.superstep import (
+    SuperstepLoop,
     active_metric,
     materialize,
     materialize_observed,
     merge_join,
+    no_active,
     prepare_gather_edges,
     symmetrize,
     with_frontier_hint,
@@ -105,66 +105,54 @@ def connected_components(
         )
     else:
         state = dv.select("id", F.col("id").alias("comp"), F.lit(True).alias("changed"), "deg")
-    start_step = 0
-    resumed = False
-    if ctx is not None:
-        rp = ctx.resume_point()
-        if rp is not None:
-            start_step, state = rp  # changed flag persisted -> frontier restored
-            resumed = True
-    if start_step == 0:
-        state = materialize(state, ctx, 0)
-    n_vertices = state.count()
-    active = state.filter("changed").count() if start_step else n_vertices
+    with SuperstepLoop(ctx, max_iters, stop=no_active) as loop:
+        resumed = loop.state is not None
+        # a resumed snapshot persists the changed flag -> frontier restored
+        state = loop.state if resumed else materialize(state, ctx, 0)
+        n_vertices = state.count()
 
-    salted, hubs = False, None
-    if hub_threshold is not None:
-        if resumed or vertices is not None:
-            # no cached sym-degree available — probe the edge table
-            salted, hubs = pick_hub_keys(probe=top_degree_keys(sym, "dst", hub_threshold))
-        else:
-            # hub keys read off the cached state — no separate probe scan
-            salted, hubs = pick_hub_keys(
-                state_keys=state.filter(F.col("deg") > hub_threshold).select(F.col("id").alias("dst"))
+        salted, hubs = False, None
+        if hub_threshold is not None:
+            if resumed or vertices is not None:
+                # no cached sym-degree available — probe the edge table
+                salted, hubs = pick_hub_keys(probe=top_degree_keys(sym, "dst", hub_threshold))
+            else:
+                # hub keys read off the cached state — no separate probe scan
+                salted, hubs = pick_hub_keys(
+                    state_keys=state.filter(F.col("deg") > hub_threshold).select(F.col("id").alias("dst"))
+                )
+            loop.own(hubs)
+            if salted:
+                sym = tag_hubs(sym, hubs)
+        if "deg" in state.columns:
+            state = state.select("id", "comp", "changed")
+        # gather-aligned edge cache: zero shuffle exchanges per superstep in
+        # the broadcast-state regime (superstep.prepare_gather_edges)
+        prepared = prepare_gather_edges(sym, n_vertices, salted)
+        if prepared is not sym:
+            sym = loop.own(prepared)
+
+        def step(state, k, prev):
+            active = prev["active"]
+            frontier = with_frontier_hint(state.filter("changed").select("id", "comp"), active)
+            msg_cols = [sym["dst"], F.col("comp")] + ([sym[HUB_FLAG]] if salted else [])
+            msgs = sym.join(frontier, sym["src"] == frontier["id"]).select(*msg_cols)
+            if salted:
+                agg = skewed_gather(msgs, "dst", [("min", "comp", "new_comp")], n_salts)
+            else:
+                agg = msgs.groupBy("dst").agg(F.min("comp").alias("new_comp"))
+            state = (
+                # fan-out guard: the agg can have far more rows than the
+                # frontier (hub out-neighborhoods) but never more than |V|
+                merge_join(state, agg, state["id"] == agg["dst"], min(active * 64, n_vertices))
+                .select(
+                    "id",
+                    F.least("comp", F.coalesce("new_comp", F.col("comp"))).alias("comp"),
+                    (F.coalesce("new_comp", F.col("comp")) < F.col("comp")).alias("changed"),
+                )
             )
-        if salted:
-            sym = tag_hubs(sym, hubs)
-    if "deg" in state.columns:
-        state = state.select("id", "comp", "changed")
-    # gather-aligned edge cache: zero shuffle exchanges per superstep in
-    # the broadcast-state regime (superstep.prepare_gather_edges)
-    prepared = prepare_gather_edges(sym, n_vertices, salted)
-    owned_cache = prepared is not sym
-    sym = prepared
+            state, om = materialize_observed(state, [active_metric()], ctx, k)
+            return state, {"active": int(om["active"] or 0), "delta": None}
 
-    for step in range(start_step + 1, max_iters + 1):
-        if active == 0:
-            break
-        t0 = time.time()
-        frontier = with_frontier_hint(state.filter("changed").select("id", "comp"), active)
-        msg_cols = [sym["dst"], F.col("comp")] + ([sym[HUB_FLAG]] if salted else [])
-        msgs = sym.join(frontier, sym["src"] == frontier["id"]).select(*msg_cols)
-        if salted:
-            agg = skewed_gather(msgs, "dst", [("min", "comp", "new_comp")], n_salts)
-        else:
-            agg = msgs.groupBy("dst").agg(F.min("comp").alias("new_comp"))
-        state = (
-            # fan-out guard: the agg can have far more rows than the
-            # frontier (hub out-neighborhoods) but never more than |V|
-            merge_join(state, agg, state["id"] == agg["dst"], min(active * 64, n_vertices))
-            .select(
-                "id",
-                F.least("comp", F.coalesce("new_comp", F.col("comp"))).alias("comp"),
-                (F.coalesce("new_comp", F.col("comp")) < F.col("comp")).alias("changed"),
-            )
-        )
-        state, om = materialize_observed(state, [active_metric()], ctx, step)
-        active = int(om["active"] or 0)
-        if ctx is not None:
-            ctx.commit(step, active=active, delta=None, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
-
-    if owned_cache:
-        sym.unpersist()
-    if hubs is not None:
-        hubs.unpersist()
-    return state.select("id", F.col("comp").alias("component"))
+        state, _ = loop.run(state, step, first={"active": n_vertices})
+        return state.select("id", F.col("comp").alias("component"))

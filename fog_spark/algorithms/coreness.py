@@ -25,14 +25,14 @@ Batagelj-Zaversnik peel.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 from fog_spark.engine.superstep import (
+    SuperstepLoop,
     active_metric,
     materialize,
     materialize_observed,
+    no_active,
     symmetrize,
     vertices_of,
 )
@@ -50,25 +50,20 @@ def coreness(
     then an upper bound, exact once converged); ``rounds=None`` runs to
     the fixed point (exact coreness). ctx-resumable per round."""
     vertices = vertices if vertices is not None else vertices_of(edges)
-    sym = symmetrize(edges).distinct().persist()
-    deg = sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("c"))
-    state = (
-        vertices.join(deg, "id", "left")
-        .select("id", F.coalesce("c", F.lit(0)).cast("long").alias("c"),
-                F.lit(True).alias("changed"))
-    )
-    start = 0
-    if ctx is not None:
-        rp = ctx.resume_point() if rounds is None else ctx.resume_point_at_most(rounds)
-        if rp is not None:
-            start, state = rp
-    if start == 0:
-        state = materialize(state, ctx, 0)
-
     cap = rounds if rounds is not None else max_iters
-    try:
-        for step in range(start + 1, cap + 1):
-            t0 = time.time()
+    with SuperstepLoop(ctx, cap, stop=no_active if rounds is None else None) as loop:
+        sym = loop.own(symmetrize(edges).distinct().persist())
+        state = loop.state
+        if state is None:
+            deg = sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("c"))
+            state = (
+                vertices.join(deg, "id", "left")
+                .select("id", F.coalesce("c", F.lit(0)).cast("long").alias("c"),
+                        F.lit(True).alias("changed"))
+            )
+            state = materialize(state, ctx, 0)
+
+        def step(state, k, prev):
             st = state.select(F.col("id").alias("sid"), F.col("c").alias("sc"))
             msgs = sym.join(st, sym["src"] == F.col("sid")).select(
                 sym["dst"].alias("id"), F.col("sc")
@@ -87,13 +82,8 @@ def coreness(
                     (F.coalesce("h", F.lit(0)) != F.col("c")).alias("changed"),
                 )
             )
-            state, om = materialize_observed(state, [active_metric()], ctx, step)
-            active = int(om["active"] or 0)
-            if ctx is not None:
-                ctx.commit(step, active=active, delta=None, wall_s=time.time() - t0,
-                           lineage=ctx.lineage_of(state))
-            if rounds is None and active == 0:
-                break
+            state, om = materialize_observed(state, [active_metric()], ctx, k)
+            return state, {"active": int(om["active"] or 0), "delta": None}
+
+        state, _ = loop.run(state, step)
         return state.select("id", F.col("c").alias("coreness"))
-    finally:
-        sym.unpersist()

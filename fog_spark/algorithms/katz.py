@@ -18,11 +18,10 @@ Katz completes the centrality family next to HITS/SALSA/betweenness.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
 from fog_spark.engine.superstep import (
+    SuperstepLoop,
     materialize,
     materialize_observed,
     maybe_broadcast,
@@ -44,33 +43,28 @@ def katz(
     verts = vertices_of(e).localCheckpoint(eager=False)
     n = verts.count()
 
-    state = verts.select("id", F.lit(0.0).alias("katz"))
-    start = 0
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(niters)
-        if rp is not None:
-            start, state = rp
-    if start == 0:
-        state = materialize(state, ctx, 0)
+    with SuperstepLoop(ctx, niters) as loop:
+        state = loop.state
+        if state is None:
+            state = materialize(verts.select("id", F.lit(0.0).alias("katz")), ctx, 0)
 
-    for it in range(start + 1, niters + 1):
-        t0 = time.time()
-        st = maybe_broadcast(state, n)
-        msg = e.join(st, e["src"] == st["id"]).select(
-            e["dst"].alias("mid"), F.col("katz").alias("m")
-        )
-        agg = msg.groupBy("mid").agg(F.sum("m").alias("s"))
-        # x_{k+1} = alpha * (sum of in-neighbor x_k) + beta
-        nxt = (
-            state.select("id")
-            .join(maybe_broadcast(agg, n), state["id"] == F.col("mid"), "left")
-            .select(
-                "id",
-                (F.lit(alpha) * F.coalesce("s", F.lit(0.0)) + F.lit(beta)).alias("katz"),
+        def step(state, it, prev):
+            st = maybe_broadcast(state, n)
+            msg = e.join(st, e["src"] == st["id"]).select(
+                e["dst"].alias("mid"), F.col("katz").alias("m")
             )
-        )
-        state, om = materialize_observed(nxt, [F.sum("katz").alias("mass")], ctx, it)
-        if ctx is not None:
-            ctx.commit(it, active=n, delta=float(om["mass"] or 0.0),
-                       wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
+            agg = msg.groupBy("mid").agg(F.sum("m").alias("s"))
+            # x_{k+1} = alpha * (sum of in-neighbor x_k) + beta
+            nxt = (
+                state.select("id")
+                .join(maybe_broadcast(agg, n), state["id"] == F.col("mid"), "left")
+                .select(
+                    "id",
+                    (F.lit(alpha) * F.coalesce("s", F.lit(0.0)) + F.lit(beta)).alias("katz"),
+                )
+            )
+            state, om = materialize_observed(nxt, [F.sum("katz").alias("mass")], ctx, it)
+            return state, {"active": n, "delta": float(om["mass"] or 0.0)}
+
+        state, _ = loop.run(state, step)
     return state.select("id", "katz")

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from fog_spark.engine.superstep import materialize_observed, symmetrize, vertices_of
+from fog_spark.engine.superstep import SuperstepLoop, materialize_observed, symmetrize, vertices_of
 
 
 def k_core(
@@ -40,54 +40,34 @@ def k_core(
     restarted with the same run dir continues from the last committed
     round and reaches the identical fixed point.
     """
-    import time
-
     vertices = vertices if vertices is not None else vertices_of(edges)
-    # persist: every peel round re-reads the symmetrized edge table
-    sym = symmetrize(edges).distinct().persist()
-    try:
-        alive = vertices.select("id")
-        n_alive: int | None = None  # counted once, lazily, for round-1 fixed-point detection
-        m = 0
-        if ctx is not None:
-            # fixed-depth mode caps the resume at the REQUESTED round:
-            # a deeper earlier run must not silently answer for round k
-            # (raises if retention vacuumed the exact round's snapshot)
-            rp = ctx.resume_point() if rounds is None else ctx.resume_point_at_most(rounds)
-            if rp is not None:
-                m, state = rp
-                if rounds is not None and m >= rounds:
-                    return state.select("id", "degree")
-                alive = state.select("id")
-                if rounds is None:
-                    # fixed-point detection needs |alive| of the resumed round
-                    n_alive = alive.count()
-        while True:
-            t0 = time.time()
+    # fixed-point mode stops after the round in which nobody dropped or
+    # everybody went (fixed-depth mode runs exactly ``rounds`` peels)
+    fixed_point = False
+    with SuperstepLoop(ctx, rounds, stop=lambda rec: fixed_point) as loop:
+        # persist: every peel round re-reads the symmetrized edge table
+        sym = loop.own(symmetrize(edges).distinct().persist())
+        state = loop.state if loop.state is not None else vertices.select("id")
+
+        def step(state, m, prev):
+            nonlocal fixed_point
+            alive = state.select("id")
             deg = (
                 sym.join(alive.select(F.col("id").alias("src")), "src", "left_semi")
                 .join(alive.select(F.col("id").alias("dst")), "dst", "left_semi")
                 .groupBy(F.col("src").alias("id"))
                 .agg(F.count(F.lit(1)).alias("degree"))
             )
-            survivors = deg.filter(F.col("degree") >= k)
             survivors, om = materialize_observed(
-                survivors, [F.count(F.lit(1)).alias("n")], ctx, m + 1
+                deg.filter(F.col("degree") >= k), [F.count(F.lit(1)).alias("n")], ctx, m
             )
             n_surv = int(om["n"] or 0)
-            m += 1
-            if ctx is not None:
-                ctx.commit(m, active=n_surv, delta=None, wall_s=time.time() - t0,
-                           lineage=ctx.lineage_of(survivors))
-            if rounds is not None:
-                done = m >= rounds  # fixed-depth mode never needs |alive|
-            else:
-                if n_alive is None:
-                    n_alive = alive.count()
-                done = n_surv == n_alive or n_surv == 0  # nobody dropped / all gone
-            alive, n_alive = survivors.select("id"), n_surv
-            if done:
-                # survivors is materialized (lineage cut), safe to drop sym
-                return survivors.select("id", "degree")
-    finally:
-        sym.unpersist()
+            if rounds is None:
+                # |alive| = the previous round's survivors (counted once,
+                # lazily, before the first round's record exists)
+                n_alive = prev["active"] if prev is not None else alive.count()
+                fixed_point = n_surv == n_alive or n_surv == 0
+            return survivors, {"active": n_surv, "delta": None}
+
+        state, _ = loop.run(state, step)
+        return state.select("id", "degree")

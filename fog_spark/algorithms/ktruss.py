@@ -26,11 +26,9 @@ decomposition).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
-from fog_spark.engine.superstep import materialize_observed
+from fog_spark.engine.superstep import SuperstepLoop, materialize_observed
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -85,39 +83,24 @@ def k_truss(
     """
     if k < 2:
         raise ValueError("k-truss needs k >= 2")
-    und = _canonical(edges)
+    fixed_point = False  # see k_core: nobody dropped, or all edges gone
+    with SuperstepLoop(ctx, rounds, stop=lambda rec: fixed_point) as loop:
+        und = loop.state.select("a", "b") if loop.state is not None else _canonical(edges)
 
-    m = 0
-    n_alive: int | None = None
-    if ctx is not None:
-        rp = ctx.resume_point() if rounds is None else ctx.resume_point_at_most(rounds)
-        if rp is not None:
-            m, state = rp
-            if rounds is not None and m >= rounds:
-                return state.select("a", "b")
-            und = state.select("a", "b")
+        def step(und, m, prev):
+            nonlocal fixed_point
+            sup = _edge_support(und)
+            keep = (
+                und.join(sup, ["a", "b"], "left")
+                .filter(F.coalesce("sup", F.lit(0)) >= k - 2)
+                .select("a", "b")
+            )
+            keep, om = materialize_observed(keep, [F.count(F.lit(1)).alias("n")], ctx, m)
+            n_keep = int(om["n"] or 0)
             if rounds is None:
-                n_alive = und.count()
-    while True:
-        t0 = time.time()
-        sup = _edge_support(und)
-        keep = (
-            und.join(sup, ["a", "b"], "left")
-            .filter(F.coalesce("sup", F.lit(0)) >= k - 2)
-            .select("a", "b")
-        )
-        keep, om = materialize_observed(keep, [F.count(F.lit(1)).alias("n")], ctx, m + 1)
-        n_keep = int(om["n"] or 0)
-        m += 1
-        if ctx is not None:
-            ctx.commit(m, active=n_keep, delta=None, wall_s=time.time() - t0,
-                       lineage=ctx.lineage_of(keep))
-        if rounds is not None:
-            done = m >= rounds
-        else:
-            if n_alive is None:
-                n_alive = und.count()
-            done = n_keep == n_alive or n_keep == 0
-        und, n_alive = keep, n_keep
-        if done:
-            return und.select("a", "b")
+                n_alive = prev["active"] if prev is not None else und.count()
+                fixed_point = n_keep == n_alive or n_keep == 0
+            return keep, {"active": n_keep, "delta": None}
+
+        und, _ = loop.run(und, step)
+        return und.select("a", "b")

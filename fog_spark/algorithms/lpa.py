@@ -22,17 +22,17 @@ job (one Spark job per superstep).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
 from fog_spark.engine.skew import HUB_DEGREE_THRESHOLD, HUB_FLAG, pick_hub_keys, skewed_gather, tag_hubs, top_degree_keys
 from fog_spark.engine.superstep import (
+    SuperstepLoop,
     active_metric,
     materialize,
     materialize_observed,
     maybe_broadcast,
     merge_join,
+    no_active,
     prepare_gather_edges,
     symmetrize,
 )
@@ -47,100 +47,86 @@ def label_propagation(
     n_salts: int = 16,
 ) -> DataFrame:
     """Returns (id, label). Isolated vertices keep their own id."""
-    # mode counts must not double-count duplicate (src,dst) pairs.
-    # The distinct is a full shuffle — cache it so the hub probe and the
-    # aligned re-partition below read it once, not recompute it each.
-    sym0 = symmetrize(edges).distinct().persist()
-    sym = sym0
+    with SuperstepLoop(ctx, max_iters, stop=no_active) as loop:
+        if loop.done:  # the resumed step is the fixed point
+            return loop.state.select("id", "label")
+        # mode counts must not double-count duplicate (src,dst) pairs.
+        # The distinct is a full shuffle — cache it so the hub probe and the
+        # aligned re-partition below read it once, not recompute it each.
+        sym0 = loop.own(symmetrize(edges).distinct().persist())
+        sym = sym0
 
-    # default vertex set + sym-degree (for the hub probe) from ONE
-    # union-aggregate over the cached sym0 (self-loop-only vertices ride
-    # along with a zero contribution) — replaces the vertices_of
-    # distinct AND the separate top_degree_keys probe scan
-    if vertices is None:
-        state = (
-            sym0.select(F.col("dst").alias("id"), F.lit(1).alias("_d"))
-            .unionByName(
-                edges.select("src", "dst")
-                .filter(F.col("src") == F.col("dst"))
-                .select(F.col("src").alias("id"), F.lit(0).alias("_d"))
+        resumed = loop.state is not None
+        if resumed:
+            state = loop.state.select("id", "label")
+        elif vertices is None:
+            # default vertex set + sym-degree (for the hub probe) from ONE
+            # union-aggregate over the cached sym0 (self-loop-only vertices
+            # ride along with a zero contribution) — replaces the
+            # vertices_of distinct AND the separate top_degree_keys probe scan
+            state = (
+                sym0.select(F.col("dst").alias("id"), F.lit(1).alias("_d"))
+                .unionByName(
+                    edges.select("src", "dst")
+                    .filter(F.col("src") == F.col("dst"))
+                    .select(F.col("src").alias("id"), F.lit(0).alias("_d"))
+                )
+                .groupBy("id")
+                .agg(F.sum("_d").alias("deg"))
+                .select("id", F.col("id").alias("label"), "deg")
             )
-            .groupBy("id")
-            .agg(F.sum("_d").alias("deg"))
-            .select("id", F.col("id").alias("label"), "deg")
-        )
-    else:
-        state = vertices.select("id", F.col("id").alias("label"), F.lit(None).cast("long").alias("deg"))
-    start_step = 0
-    resumed = False
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(max_iters)
-        if rp is not None:
-            start_step, state = rp
+        else:
+            state = vertices.select("id", F.col("id").alias("label"), F.lit(None).cast("long").alias("deg"))
+        if not resumed:
+            state = materialize(state, ctx, 0)
+        n = state.count()
+
+        salted, hubs = False, None
+        if hub_threshold is not None:
+            if resumed or vertices is not None:
+                salted, hubs = pick_hub_keys(probe=top_degree_keys(sym0, "dst", hub_threshold))
+            else:
+                # hub keys read off the cached state — no separate probe scan
+                salted, hubs = pick_hub_keys(
+                    state_keys=state.filter(F.col("deg") > hub_threshold).select(F.col("id").alias("dst"))
+                )
+            loop.own(hubs)
+            if salted:
+                sym = tag_hubs(sym0, hubs)
+        if "deg" in state.columns:
             state = state.select("id", "label")
-            resumed = True
-            last = ctx.last_committed() or {}
-            if last.get("active") == 0:  # already at fixed point
-                sym0.unpersist()
-                return state
-    if start_step == 0:
-        state = materialize(state, ctx, 0)
-    n = state.count()
+        # gather-aligned cache: with broadcast state both mode aggregations
+        # reuse hash(dst) — zero exchanges per superstep (see
+        # superstep.prepare_gather_edges; the LPA composite (dst,label) key
+        # shuffles near-|E| partials otherwise, the worst case of the folds)
+        prepared = prepare_gather_edges(sym, n, salted)
+        if prepared is not sym:  # new aligned cache: materialize it off sym0's
+            sym = loop.own(prepared)
+            sym.count()
+            sym0.unpersist()
+        # else (salted): the loop keeps reading through sym0's cache
 
-    salted, hubs = False, None
-    if hub_threshold is not None:
-        if resumed or vertices is not None:
-            salted, hubs = pick_hub_keys(probe=top_degree_keys(sym0, "dst", hub_threshold))
-        else:
-            # hub keys read off the cached state — no separate probe scan
-            salted, hubs = pick_hub_keys(
-                state_keys=state.filter(F.col("deg") > hub_threshold).select(F.col("id").alias("dst"))
+        def step(state, k, prev):
+            st = maybe_broadcast(state, n)
+            msg_cols = [sym["dst"], F.col("label")] + ([sym[HUB_FLAG]] if salted else [])
+            msgs = sym.join(st, sym["src"] == st["id"]).select(*msg_cols)
+            if salted:
+                counts = skewed_gather(msgs, ["dst", "label"], [("count", F.lit(1), "cnt")], n_salts)
+            else:
+                counts = msgs.groupBy("dst", "label").agg(F.count(F.lit(1)).alias("cnt"))
+            best = counts.groupBy("dst").agg(
+                F.min(F.struct((-F.col("cnt")).alias("neg"), F.col("label").alias("lbl"))).alias("b")
+            ).select("dst", F.col("b.lbl").alias("new_label"))
+            state = (
+                merge_join(state, best, state["id"] == best["dst"], n)
+                .select(
+                    "id",
+                    F.coalesce("new_label", F.col("label")).alias("label"),
+                    (F.coalesce("new_label", F.col("label")) != F.col("label")).alias("changed"),
+                )
             )
-        if salted:
-            sym = tag_hubs(sym0, hubs)
-    if "deg" in state.columns:
-        state = state.select("id", "label")
-    # gather-aligned cache: with broadcast state both mode aggregations
-    # reuse hash(dst) — zero exchanges per superstep (see
-    # superstep.prepare_gather_edges; the LPA composite (dst,label) key
-    # shuffles near-|E| partials otherwise, the worst case of the folds)
-    prepared = prepare_gather_edges(sym, n, salted)
-    if prepared is not sym:  # new aligned cache: materialize it off sym0's
-        sym = prepared
-        sym.count()
-        sym0.unpersist()
-    # else (salted): the loop keeps reading through sym0's cache
+            state, om = materialize_observed(state, [active_metric()], ctx, k)
+            return state.select("id", "label"), {"active": int(om["active"] or 0), "delta": None}
 
-    for step in range(start_step + 1, max_iters + 1):
-        t0 = time.time()
-        st = maybe_broadcast(state, n)
-        msg_cols = [sym["dst"], F.col("label")] + ([sym[HUB_FLAG]] if salted else [])
-        msgs = sym.join(st, sym["src"] == st["id"]).select(*msg_cols)
-        if salted:
-            counts = skewed_gather(msgs, ["dst", "label"], [("count", F.lit(1), "cnt")], n_salts)
-        else:
-            counts = msgs.groupBy("dst", "label").agg(F.count(F.lit(1)).alias("cnt"))
-        best = counts.groupBy("dst").agg(
-            F.min(F.struct((-F.col("cnt")).alias("neg"), F.col("label").alias("lbl"))).alias("b")
-        ).select("dst", F.col("b.lbl").alias("new_label"))
-        state = (
-            merge_join(state, best, state["id"] == best["dst"], n)
-            .select(
-                "id",
-                F.coalesce("new_label", F.col("label")).alias("label"),
-                (F.coalesce("new_label", F.col("label")) != F.col("label")).alias("changed"),
-            )
-        )
-        state, om = materialize_observed(state, [active_metric()], ctx, step)
-        changed = int(om["active"] or 0)
-        state = state.select("id", "label")
-        if ctx is not None:
-            ctx.commit(step, active=changed, delta=None, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
-        if changed == 0:
-            break
-
-    sym.unpersist()
-    sym0.unpersist()  # no-op when already dropped above
-    if hubs is not None:
-        hubs.unpersist()  # no-op for the checkpointed form
-    return state.select("id", "label")
+        state, _ = loop.run(state, step)
+        return state.select("id", "label")

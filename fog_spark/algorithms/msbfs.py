@@ -24,11 +24,9 @@ other algorithms.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
-from fog_spark.engine.superstep import materialize, materialize_observed, with_frontier_hint
+from fog_spark.engine.superstep import SuperstepLoop, materialize, materialize_observed, no_active, with_frontier_hint
 
 
 def multi_source_bfs(
@@ -44,41 +42,31 @@ def multi_source_bfs(
     fwd = edges.filter(F.col("src") != F.col("dst")).select("src", "dst")
     if not isinstance(roots, DataFrame):
         roots = spark.createDataFrame([(int(r),) for r in roots], "root long")
-    state = roots.select(F.col("root").alias("id"), "root", F.lit(0).alias("dist"))
+    with SuperstepLoop(ctx, max_iters, stop=no_active) as loop:
+        state = loop.state
+        if state is None:
+            state = materialize(roots.select(F.col("root").alias("id"), "root", F.lit(0).alias("dist")), ctx, 0)
 
-    start = 0
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(max_iters)
-        if rp is not None:
-            start, state = rp
-    if start == 0:
-        state = materialize(state, ctx, 0)
-        active = state.count()
-    else:
-        active = state.filter(F.col("dist") == start).count()
+        def step(state, k, prev):
+            frontier = with_frontier_hint(
+                state.filter(F.col("dist") == k - 1).select("id", "root"), prev["active"]
+            )
+            msgs = fwd.join(frontier, fwd["src"] == frontier["id"]).select(
+                fwd["dst"].alias("id"), "root"
+            )
+            # min-dist per (dst, root) is just "seen this step and not
+            # before": distinct + anti-join the accumulated state
+            cand = msgs.distinct().join(state.select("id", "root"), ["id", "root"], "left_anti")
+            new = cand.select("id", "root", F.lit(k).alias("dist"))
+            state, om = materialize_observed(
+                state.unionByName(new),
+                [F.sum((F.col("dist") == k).cast("long")).alias("active")],
+                ctx,
+                k,
+            )
+            return state, {"active": int(om["active"] or 0), "delta": None}
 
-    for step in range(start + 1, max_iters + 1):
-        if active == 0:
-            break
-        t0 = time.time()
-        frontier = with_frontier_hint(
-            state.filter(F.col("dist") == step - 1).select("id", "root"), active
-        )
-        msgs = fwd.join(frontier, fwd["src"] == frontier["id"]).select(
-            fwd["dst"].alias("id"), "root"
-        )
-        # min-dist per (dst, root) is just "seen this step and not
-        # before": distinct + anti-join the accumulated state
-        cand = msgs.distinct().join(state.select("id", "root"), ["id", "root"], "left_anti")
-        new = cand.select("id", "root", F.lit(step).alias("dist"))
-        state, om = materialize_observed(
-            state.unionByName(new),
-            [F.sum((F.col("dist") == step).cast("long")).alias("active")],
-            ctx,
-            step,
-        )
-        active = int(om["active"] or 0)
-        if ctx is not None:
-            ctx.commit(step, active=active, delta=None, wall_s=time.time() - t0,
-                       lineage=ctx.lineage_of(state))
+        # fresh: the roots; resumed: an upper bound on the frontier, used
+        # only when the resumed step's metric record is unreadable
+        state, _ = loop.run(state, step, first={"active": state.count()})
     return state.select("id", "root", F.col("dist").cast("long").alias("dist"))

@@ -35,11 +35,10 @@ would vanish from the pointer graph and split a component.)
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
 from fog_spark.engine.superstep import (
+    SuperstepLoop,
     materialize,
     materialize_observed,
     maybe_broadcast,
@@ -115,56 +114,47 @@ def minimum_spanning_forest(
     a killed run resumes mid-forest and returns the COMPLETE forest
     (already-picked rounds are read back from the run dir).
     """
-    ecan = canonical_edges(edges, weight_col).persist()
-    comp = vertices_of(edges).select("id", F.col("id").alias("comp"))
-
-    start = 0
-    if ctx is not None:
-        rp = ctx.resume_point() if rounds is None else ctx.resume_point_at_most(rounds)
-        if rp is not None:
-            start, comp = rp
-    if start == 0:
-        comp = materialize(comp, ctx, 0)
-    n = comp.count()
     spark = edges.sparkSession
+    with SuperstepLoop(ctx, rounds) as loop:
+        ecan = loop.own(canonical_edges(edges, weight_col).persist())
+        comp = loop.state
+        if comp is None:
+            comp = materialize(vertices_of(edges).select("id", F.col("id").alias("comp")), ctx, 0)
+        n = comp.count()
 
-    forest_parts: list[DataFrame] = []
-    if ctx is not None and start > 0:
-        # picked edges of completed rounds were committed alongside the
-        # component map — read them back so resume returns the FULL forest
-        for s in ctx.fmt.list_partitions("forest"):
-            if s <= start:
-                forest_parts.append(ctx.read_state(s, name="forest").select("a", "b", "w"))
+        forest_parts: list[DataFrame] = []
+        if loop.state is not None:
+            # picked edges of completed rounds were committed alongside the
+            # component map — read them back so resume returns the FULL forest
+            for s in ctx.fmt.list_partitions("forest"):
+                if s <= loop.start:
+                    forest_parts.append(ctx.read_state(s, name="forest").select("a", "b", "w"))
 
-    r = start
-    while rounds is None or r < rounds:
-        t0 = time.time()
-        r += 1
-        cm = maybe_broadcast(comp, n)
-        ca = cm.select(F.col("id").alias("a"), F.col("comp").alias("ca"))
-        cb = cm.select(F.col("id").alias("b"), F.col("comp").alias("cb"))
-        cross = ecan.join(ca, "a").join(cb, "b").where(F.col("ca") != F.col("cb"))
-        # every cross edge offers itself to BOTH sides; per-component
-        # min over struct (w, a, b) = the deterministic Borůvka pick
-        offer = F.struct("w", "a", "b", "ca", "cb").alias("e")
-        msgs = cross.select(F.col("ca").alias("c"), offer).unionByName(
-            cross.select(F.col("cb").alias("c"), offer)
-        )
-        per_pick = msgs.groupBy("c").agg(F.min("e").alias("e")).localCheckpoint(eager=True)
-        if per_pick.isEmpty():
-            break
-        picked = per_pick.select("e.w", "e.a", "e.b").distinct()
-        if ctx is not None:
-            picked = ctx.write_state(picked.select("a", "b", "w"), r, name="forest")
-        forest_parts.append(picked.select("a", "b", "w"))
-        relab = _contract(per_pick)
-        comp = comp.join(maybe_broadcast(relab, n), "comp", "left").select(
-            "id", F.coalesce("new_comp", "comp").alias("comp")
-        )
-        comp = materialize(comp, ctx, r)
-        if ctx is not None:
-            ctx.commit(r, active=-1, delta=None, wall_s=time.time() - t0,
-                       lineage=ctx.lineage_of(comp))
+        def step(comp, r, prev):
+            cm = maybe_broadcast(comp, n)
+            ca = cm.select(F.col("id").alias("a"), F.col("comp").alias("ca"))
+            cb = cm.select(F.col("id").alias("b"), F.col("comp").alias("cb"))
+            cross = ecan.join(ca, "a").join(cb, "b").where(F.col("ca") != F.col("cb"))
+            # every cross edge offers itself to BOTH sides; per-component
+            # min over struct (w, a, b) = the deterministic Borůvka pick
+            offer = F.struct("w", "a", "b", "ca", "cb").alias("e")
+            msgs = cross.select(F.col("ca").alias("c"), offer).unionByName(
+                cross.select(F.col("cb").alias("c"), offer)
+            )
+            per_pick = msgs.groupBy("c").agg(F.min("e").alias("e")).localCheckpoint(eager=True)
+            if per_pick.isEmpty():
+                return None  # no component has an outgoing edge: the forest is complete
+            picked = per_pick.select("e.w", "e.a", "e.b").distinct()
+            if ctx is not None:
+                picked = ctx.write_state(picked.select("a", "b", "w"), r, name="forest")
+            forest_parts.append(picked.select("a", "b", "w"))
+            relab = _contract(per_pick)
+            comp = comp.join(maybe_broadcast(relab, n), "comp", "left").select(
+                "id", F.coalesce("new_comp", "comp").alias("comp")
+            )
+            return materialize(comp, ctx, r), {"active": -1, "delta": None}
+
+        loop.run(comp, step)
 
     if not forest_parts:
         return spark.createDataFrame([], "a long, b long, w double")

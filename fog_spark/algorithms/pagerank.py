@@ -1,4 +1,4 @@
-"""PageRank — two modes, two kernels.
+"""PageRank — FOG-exact, standard, weighted and personalized modes.
 
 Modes
 -----
@@ -18,33 +18,25 @@ Modes
   with uniform dangling-mass redistribution, iterated until
   max_v |rank_k − rank_{k−1}| < tol (north_rule: 1e-6).
 
-Kernels
--------
-- ``kernel="df"``: pure DataFrame ops — scatter join + partial-hash-agg
-  shuffle, whole-stage-codegen'd, zero Python in the loop.
-- ``kernel="csr"``: the north_star's CSR-packed path — edges and state
-  are co-partitioned by hash(src); adjacency is packed into NumPy CSR
-  arrays ONCE (engine/csr.pack_csr), and each superstep a cogrouped
-  Arrow pandas UDF computes all messages vectorized and PRE-AGGREGATES
-  them by dst before the shuffle (np.bincount = map-side combine). No
-  per-row Python anywhere.
-
-Measured tradeoff (sandbox, 8 cores): df 46s vs csr 452s for 5
-supersteps over 40M edges — the packed arrays cross the JVM<->Python
-Arrow boundary every superstep (~640MB/superstep here), while the df
-kernel never leaves whole-stage codegen. Use csr only when the per-edge
-kernel cannot be expressed in Spark SQL (custom numerics, model
-scoring); for SQL-expressible folds the df kernel is strictly better.
+Kernel
+------
+Every mode runs its supersteps as pure DataFrame ops — scatter join +
+partial-hash-agg shuffle, whole-stage-codegen'd, zero Python in the
+loop — on the shared superstep driver (engine/superstep.SuperstepLoop).
+A CSR-packed pandas-UDF kernel (cogrouped Arrow UDF over NumPy CSR
+blocks) was measured and removed: df 46s vs csr 452s for 5 supersteps
+over 40M edges (sandbox, 8 cores), because the packed arrays cross the
+JVM<->Python Arrow boundary every superstep (~640MB/superstep there)
+while the df kernel never leaves whole-stage codegen.
 """
 
 from __future__ import annotations
 
-import time
-import numpy as np
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from fog_spark.engine.skew import HUB_DEGREE_THRESHOLD, HUB_FLAG, pick_hub_keys, skewed_gather, tag_hubs, top_degree_keys
 from fog_spark.engine.superstep import (
+    SuperstepLoop,
     degrees_and_vertices,
     materialize,
     materialize_observed,
@@ -57,28 +49,29 @@ from fog_spark.engine.superstep import (
 DAMPING = 0.85  # application/pagerank.hpp:22
 
 
-def _hub_tagged(edges: DataFrame, hub_threshold: int | None) -> tuple[DataFrame, bool, "DataFrame | None"]:
-    """Tag hub in-degree keys once before the loop (skew mitigation).
+def _hub_tagged(edges: DataFrame, base: DataFrame | None, hub_threshold: int | None) -> tuple[DataFrame, bool, "DataFrame | None"]:
+    """Tag hub in-degree keys once before the loop (skew mitigation);
+    returns (edges, salted, hubs).
 
-    The (tiny) hub set is persisted and returned for cleanup — the
-    per-superstep tag join rebuilds its broadcast from that cache
-    instead of re-aggregating degrees over the whole edge table, and
-    no second full-size copy of the edge table is cached."""
+    Hub keys are read off the cached (id, indeg) preamble frame
+    ``base`` — no separate full-edge-table probe job. A resumed run has
+    no such frame and probes the edge table; that (tiny) hub set is
+    persisted, so the per-superstep tag join rebuilds its broadcast
+    from the cache instead of re-aggregating degrees, and no second
+    full-size copy of the edge table is cached. ``hubs`` is the
+    caller's to release."""
     if hub_threshold is None:
         return edges, False, None
+    if base is not None:
+        salted, hubs = pick_hub_keys(
+            state_keys=base.filter(F.col("indeg") > hub_threshold).select(F.col("id").alias("dst"))
+        )
+        return (tag_hubs(edges, hubs) if salted else edges), salted, hubs
     hubs = top_degree_keys(edges, "dst", hub_threshold).persist()
     if hubs.isEmpty():  # take(1) probe, not a full count job
         hubs.unpersist()
         return edges, False, None
     return tag_hubs(edges, hubs), True, hubs
-
-
-def _degrees(edges: DataFrame, vertices: DataFrame) -> DataFrame:
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    return (
-        vertices.join(deg, vertices["id"] == deg["src"], "left")
-        .select("id", F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
-    )
 
 
 def _degrees_with_indeg(edges: DataFrame, vertices: DataFrame | None) -> DataFrame:
@@ -102,6 +95,42 @@ def _degrees_with_indeg(edges: DataFrame, vertices: DataFrame | None) -> DataFra
     )
 
 
+def _sum_gather(edges: DataFrame, state: DataFrame, n: int, msg: Column, out: str,
+                salted: bool, n_salts: int) -> DataFrame:
+    """Scatter ``msg`` along the (tagged, gather-aligned) edges from the
+    state (broadcast when it fits) and sum it per dst as ``out`` — hub
+    keys through the salted two-stage fold."""
+    st = maybe_broadcast(state, n)
+    msg_cols = [edges["dst"], msg.alias("msg")] + ([edges[HUB_FLAG]] if salted else [])
+    msgs = edges.join(st, edges["src"] == st["id"]).select(*msg_cols)
+    if salted:
+        return skewed_gather(msgs, "dst", [("sum", "msg", out)], n_salts)
+    return msgs.groupBy("dst").agg(F.sum("msg").alias(out))
+
+
+def _converged(tol: float):
+    """Stop rule of the convergent modes, read off a metric record."""
+    return lambda rec: rec["delta"] is not None and rec["delta"] < tol
+
+
+def _materialize_delta(state: DataFrame, dangling: Column, ctx, it: int) -> tuple[DataFrame, float, float]:
+    """Materialize a convergent-mode step with the convergence delta and
+    the next step's dangling mass OBSERVED on the same job; returns
+    (state, delta, dangling). Metrics are None on an empty vertex set —
+    an empty graph is converged (matches bfs/cc/sssp's observed-metric
+    null handling)."""
+    state, om = materialize_observed(
+        state,
+        [
+            F.max(F.abs(F.col("rank") - F.col("prev"))).alias("delta"),
+            F.sum(F.when(dangling, F.col("rank")).otherwise(F.lit(0.0))).alias("dangling"),
+        ],
+        ctx,
+        it,
+    )
+    return state, float(om["delta"] or 0.0), float(om["dangling"] or 0.0)
+
+
 # ---------------------------------------------------------------------------
 # FOG mode
 # ---------------------------------------------------------------------------
@@ -113,97 +142,41 @@ def pagerank_fog(
     niters: int = 10,
     d: float = DAMPING,
     ctx=None,
-    kernel: str = "df",
-    n_kernel_parts: int | None = None,
     hub_threshold: int | None = HUB_DEGREE_THRESHOLD,
     n_salts: int = 16,
 ) -> DataFrame:
     """FOG-mode accumulating PageRank. Returns (id, rank)."""
-    spark = edges.sparkSession
-    state = _degrees_with_indeg(edges, vertices).withColumn("rank", F.lit(1.0))
+    with SuperstepLoop(ctx, niters) as loop:
+        state = loop.state
+        if state is None:
+            state = materialize(_degrees_with_indeg(edges, vertices).withColumn("rank", F.lit(1.0)), ctx, 0)
+        n = state.count()  # known once; drives broadcast decisions every superstep
 
-    start_step = 0
-    resumed = False
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(niters)
-        if rp is not None:
-            start_step, state = rp
-            resumed = True
-
-    if start_step == 0:
-        # resumed state is already parquet-backed — re-writing it would
-        # round-trip (and briefly delete) the only committed snapshot
-        state = materialize(state, ctx, 0)
-    n = state.count()  # known once; drives broadcast decisions every superstep
-
-    salted, hubs = False, None
-    if kernel == "csr":
-        from fog_spark.engine.csr import pack_csr
-
-        nparts = n_kernel_parts or int(spark.conf.get("spark.sql.shuffle.partitions"))
-        packed = pack_csr(edges, nparts).persist()
-        packed.count()  # pack ONCE; reused by every superstep
-    elif hub_threshold is not None:
-        if resumed:
-            # resumed snapshots past step 0 carry no indeg — probe edges
-            edges, salted, hubs = _hub_tagged(edges, hub_threshold)
-        else:
-            # hub keys read off the cached state (indeg) — no separate
-            # full-edge-table probe aggregation job
-            salted, hubs = pick_hub_keys(
-                state_keys=state.filter(F.col("indeg") > hub_threshold).select(F.col("id").alias("dst"))
-            )
-            if salted:
-                edges = tag_hubs(edges, hubs)
-    if "indeg" in state.columns:
-        state = state.select("id", "outdeg", "rank")
-    if kernel != "csr":
+        # resumed snapshots past step 0 carry no indeg — probe edges
+        edges, salted, hubs = _hub_tagged(edges, state if loop.state is None else None, hub_threshold)
+        loop.own(hubs)
+        if "indeg" in state.columns:
+            state = state.select("id", "outdeg", "rank")
         # gather-aligned edge cache (superstep.prepare_gather_edges):
         # zero shuffle exchanges per superstep when the state broadcasts.
         # |E| = sum(outdeg) — a tiny agg over the materialized state —
         # feeds the amortization guard for this fixed-niters run.
         m = int(state.agg(F.sum("outdeg")).collect()[0][0] or 0)
-        prepared = prepare_gather_edges(
-            edges, n, salted, m_edges=m, expected_iters=niters - start_step
-        )
-        owned_cache = prepared is not edges
-        edges = prepared
+        prepared = prepare_gather_edges(edges, n, salted, m_edges=m, expected_iters=niters - loop.start)
+        if prepared is not edges:
+            edges = loop.own(prepared)
 
-    for step in range(start_step + 1, niters + 1):
-        t0 = time.time()
-        if kernel == "csr":
-            from fog_spark.engine.csr import csr_scatter_sum
+        def step(state, k, prev):
+            msg = d * F.col("rank") / F.col("outdeg") + (1.0 - d)
+            agg = _sum_gather(edges, state, n, msg, "incoming", salted, n_salts)
+            state = (
+                merge_join(state, agg, state["id"] == agg["dst"], n)
+                .select("id", "outdeg", (F.col("rank") + F.coalesce("incoming", F.lit(0.0))).alias("rank"))
+            )
+            return materialize(state, ctx, k), {"active": -1, "delta": None}
 
-            def fog_msg(sb, d=d):
-                deg = np.maximum(sb["outdeg"].to_numpy(), 1)  # outdeg-0 rows never scatter
-                return d * sb["rank"].to_numpy() / deg + (1.0 - d)
-
-            partials = csr_scatter_sum(packed, state, nparts, fog_msg)
-            agg = partials.groupBy("dst").agg(F.sum("partial").alias("incoming"))
-        else:
-            msg = (d * F.col("rank") / F.col("outdeg") + (1.0 - d)).alias("msg")
-            st = maybe_broadcast(state, n)
-            msg_cols = [edges["dst"], msg] + ([edges[HUB_FLAG]] if salted else [])
-            msgs = edges.join(st, edges["src"] == st["id"]).select(*msg_cols)
-            if salted:
-                agg = skewed_gather(msgs, "dst", [("sum", "msg", "incoming")], n_salts)
-            else:
-                agg = msgs.groupBy("dst").agg(F.sum("msg").alias("incoming"))
-        state = (
-            merge_join(state, agg, state["id"] == agg["dst"], n)
-            .select("id", "outdeg", (F.col("rank") + F.coalesce("incoming", F.lit(0.0))).alias("rank"))
-        )
-        state = materialize(state, ctx, step)
-        if ctx is not None:
-            ctx.commit(step, active=-1, delta=None, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
-
-    if kernel == "csr":
-        packed.unpersist()
-    elif owned_cache:
-        edges.unpersist()
-    if hubs is not None:
-        hubs.unpersist()
-    return state.select("id", "rank")
+        state, _ = loop.run(state, step)
+        return state.select("id", "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -236,114 +209,74 @@ def pagerank_standard(
     supersteps. Vertices absent from ``init_ranks`` (newly arrived)
     start at 1/n; a ``ctx`` resume snapshot takes precedence.
     """
-    start_it = 0
-    state = base = None
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(max_iters)
-        if rp is not None:
-            start_it, state = rp
-            # convergence must be judged by the metric record OF the
-            # resumed step: last_committed() may describe a NEWER step
-            # whose snapshot was lost (resume_point walked past it)
-            rec = next((m for m in reversed(ctx.metrics()) if m["superstep"] == start_it), {})
-            if rec.get("delta") is not None and rec["delta"] < tol:
-                return state.select("id", "rank"), start_it
-    if start_it == 0:
-        # one materialized (id, outdeg, indeg) preamble frame: vertex
-        # set, scatter degrees, and hub keys in a single shuffle, and
-        # the init plan executes ONCE (the old count-then-checkpoint
-        # flow re-executed the degree aggregation for each)
-        base = materialize(_degrees_with_indeg(edges, vertices))
-        n = base.count()
-        if n == 0:  # an empty graph is converged (and 1/n is undefined)
-            return base.select("id", F.lit(0.0).alias("rank")), 0
-        state = base.select("id", "outdeg", F.lit(1.0 / n).alias("rank"), F.lit(0.0).alias("prev"))
-        if init_ranks is not None:
-            warm = init_ranks.select(F.col("id").alias("wid"), F.col("rank").alias("wrank"))
-            state = base.join(maybe_broadcast(warm, n), base["id"] == F.col("wid"), "left").select(
-                "id", "outdeg", F.coalesce("wrank", F.lit(1.0 / n)).alias("rank"), F.lit(0.0).alias("prev")
-            )
-            # Normalize to sum 1: mass error lies along the principal
-            # eigenvector and decays only at rate d (the SLOWEST mode) —
-            # an unnormalized warm start from a grown graph measurably
-            # converges slower than uniform (103 vs 30 supersteps at 1e-10
-            # on a 31-vertex drive). Shape error decays at d·λ2, so the
-            # normalized warm start is the fast path the docstring promises.
-            tot = state.agg(F.sum("rank")).collect()[0][0] or 1.0
-            state = state.withColumn("rank", F.col("rank") / tot)
-        if ctx is not None:
-            state = materialize(state, ctx, 0)
-        elif init_ranks is not None:
-            # the warm join is not a thin projection over the cached
-            # base — checkpoint so superstep 1 doesn't execute it twice
-            state = state.localCheckpoint(eager=True)
-        # otherwise the thin projection over the cached base IS the
-        # stable step-0 leaf — a second localCheckpoint would only copy it
-    else:
-        n = state.count()
-
-    salted, hubs = False, None
-    if hub_threshold is not None:
-        if base is not None:
-            salted, hubs = pick_hub_keys(
-                state_keys=base.filter(F.col("indeg") > hub_threshold).select(F.col("id").alias("dst"))
-            )
-            if salted:
-                edges = tag_hubs(edges, hubs)
-        else:  # resumed: no cached indeg frame — probe the edge table
-            edges, salted, hubs = _hub_tagged(edges, hub_threshold)
-    state = state.select("id", "outdeg", "rank", "prev")
-    # gather-aligned edge cache — see pagerank_fog (convergent run:
-    # iteration budget unknown, assume enough supersteps to amortize)
-    prepared = prepare_gather_edges(edges, n, salted)
-    owned_cache = prepared is not edges
-    edges = prepared
-
-    # scalar pass: dangling mass of the current rank vector
-    dangling = state.filter(F.col("outdeg") == 0).agg(F.sum("rank")).collect()[0][0] or 0.0
-
-    it = start_it
-    for it in range(start_it + 1, max_iters + 1):
-        t0 = time.time()
-        st = maybe_broadcast(state, n)
-        msg_cols = [edges["dst"], (F.col("rank") / F.col("outdeg")).alias("msg")] + (
-            [edges[HUB_FLAG]] if salted else []
-        )
-        msgs = edges.join(st, edges["src"] == st["id"]).select(*msg_cols)
-        if salted:
-            agg = skewed_gather(msgs, "dst", [("sum", "msg", "contrib")], n_salts)
+    with SuperstepLoop(ctx, max_iters, stop=_converged(tol)) as loop:
+        if loop.done:
+            return loop.state.select("id", "rank"), loop.start
+        state, base = loop.state, None
+        if state is None:
+            # one materialized (id, outdeg, indeg) preamble frame: vertex
+            # set, scatter degrees, and hub keys in a single shuffle, and
+            # the init plan executes ONCE (the old count-then-checkpoint
+            # flow re-executed the degree aggregation for each)
+            base = materialize(_degrees_with_indeg(edges, vertices))
+            n = base.count()
+            if n == 0:  # an empty graph is converged (and 1/n is undefined)
+                return base.select("id", F.lit(0.0).alias("rank")), 0
+            state = base.select("id", "outdeg", F.lit(1.0 / n).alias("rank"), F.lit(0.0).alias("prev"))
+            if init_ranks is not None:
+                warm = init_ranks.select(F.col("id").alias("wid"), F.col("rank").alias("wrank"))
+                state = base.join(maybe_broadcast(warm, n), base["id"] == F.col("wid"), "left").select(
+                    "id", "outdeg", F.coalesce("wrank", F.lit(1.0 / n)).alias("rank"), F.lit(0.0).alias("prev")
+                )
+                # Normalize to sum 1: mass error lies along the principal
+                # eigenvector and decays only at rate d (the SLOWEST mode) —
+                # an unnormalized warm start from a grown graph measurably
+                # converges slower than uniform (103 vs 30 supersteps at 1e-10
+                # on a 31-vertex drive). Shape error decays at d·λ2, so the
+                # normalized warm start is the fast path the docstring promises.
+                tot = state.agg(F.sum("rank")).collect()[0][0] or 1.0
+                state = state.withColumn("rank", F.col("rank") / tot)
+            if ctx is not None:
+                state = materialize(state, ctx, 0)
+            elif init_ranks is not None:
+                # the warm join is not a thin projection over the cached
+                # base — checkpoint so superstep 1 doesn't execute it twice
+                state = state.localCheckpoint(eager=True)
+            # otherwise the thin projection over the cached base IS the
+            # stable step-0 leaf — a second localCheckpoint would only copy it
         else:
-            agg = msgs.groupBy("dst").agg(F.sum("msg").alias("contrib"))
-        state = (
-            merge_join(state, agg, state["id"] == agg["dst"], n)
-            .select(
-                "id",
-                "outdeg",
-                F.col("rank").alias("prev"),
-                ((1.0 - d) / n + d * (F.coalesce("contrib", F.lit(0.0)) + dangling / n)).alias("rank"),
+            n = state.count()
+
+        # resumed: no cached indeg frame — probe the edge table
+        edges, salted, hubs = _hub_tagged(edges, base, hub_threshold)
+        loop.own(hubs)
+        state = state.select("id", "outdeg", "rank", "prev")
+        # gather-aligned edge cache — see pagerank_fog (convergent run:
+        # iteration budget unknown, assume enough supersteps to amortize)
+        prepared = prepare_gather_edges(edges, n, salted)
+        if prepared is not edges:
+            edges = loop.own(prepared)
+
+        # scalar pass: dangling mass of the current rank vector
+        dangling = state.filter(F.col("outdeg") == 0).agg(F.sum("rank")).collect()[0][0] or 0.0
+
+        def step(state, it, prev):
+            nonlocal dangling
+            agg = _sum_gather(edges, state, n, F.col("rank") / F.col("outdeg"), "contrib", salted, n_salts)
+            state = (
+                merge_join(state, agg, state["id"] == agg["dst"], n)
+                .select(
+                    "id",
+                    "outdeg",
+                    F.col("rank").alias("prev"),
+                    ((1.0 - d) / n + d * (F.coalesce("contrib", F.lit(0.0)) + dangling / n)).alias("rank"),
+                )
             )
-        )
-        state, om = materialize_observed(
-            state,
-            [
-                F.max(F.abs(F.col("rank") - F.col("prev"))).alias("delta"),
-                F.sum(F.when(F.col("outdeg") == 0, F.col("rank")).otherwise(F.lit(0.0))).alias("dangling"),
-            ],
-            ctx,
-            it,
-        )
-        # om values are None on an empty vertex set — an empty graph is
-        # converged (matches bfs/cc/sssp's observed-metric null handling)
-        delta, dangling = float(om["delta"] or 0.0), float(om["dangling"] or 0.0)
-        if ctx is not None:
-            ctx.commit(it, active=n, delta=delta, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
-        if delta < tol:
-            break
-    if owned_cache:
-        edges.unpersist()
-    if hubs is not None:
-        hubs.unpersist()
-    return state.select("id", "rank"), it
+            state, delta, dangling = _materialize_delta(state, F.col("outdeg") == 0, ctx, it)
+            return state, {"active": n, "delta": delta}
+
+        state, it = loop.run(state, step)
+        return state.select("id", "rank"), it
 
 
 # ---------------------------------------------------------------------------
@@ -392,53 +325,39 @@ def pagerank_weighted(
     n = state.count()
     if n == 0:
         return state.select("id", "rank"), 0
-    state = state.withColumn("rank", F.lit(1.0 / n))
 
-    start_it = 0
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(max_iters)
-        if rp is not None:
-            start_it, state = rp
-            rec = next((m for m in reversed(ctx.metrics()) if m["superstep"] == start_it), {})
-            if rec.get("delta") is not None and rec["delta"] < tol:
-                return state.select("id", "rank"), start_it
-    if start_it == 0:
-        state = materialize(state, ctx, 0) if ctx else state.localCheckpoint(eager=True)
+    with SuperstepLoop(ctx, max_iters, stop=_converged(tol)) as loop:
+        if loop.done:
+            return loop.state.select("id", "rank"), loop.start
+        if loop.state is None:
+            state = state.withColumn("rank", F.lit(1.0 / n))
+            state = materialize(state, ctx, 0) if ctx else state.localCheckpoint(eager=True)
+        else:
+            state = loop.state
 
-    dangling = state.filter(~F.col("has_out")).agg(F.sum("rank")).collect()[0][0] or 0.0
+        dangling = state.filter(~F.col("has_out")).agg(F.sum("rank")).collect()[0][0] or 0.0
 
-    it = start_it
-    for it in range(start_it + 1, max_iters + 1):
-        t0 = time.time()
-        st = maybe_broadcast(state, n)
-        msgs = pe.join(st, pe["src"] == st["id"]).select(
-            pe["dst"], (F.col("rank") * F.col("p")).alias("msg")
-        )
-        agg = msgs.groupBy("dst").agg(F.sum("msg").alias("contrib"))
-        state = (
-            merge_join(state, agg, state["id"] == agg["dst"], n)
-            .select(
-                "id",
-                "has_out",
-                F.col("rank").alias("prev"),
-                ((1.0 - d) / n + d * (F.coalesce("contrib", F.lit(0.0)) + dangling / n)).alias("rank"),
+        def step(state, it, prev):
+            nonlocal dangling
+            st = maybe_broadcast(state, n)
+            msgs = pe.join(st, pe["src"] == st["id"]).select(
+                pe["dst"], (F.col("rank") * F.col("p")).alias("msg")
             )
-        )
-        state, om = materialize_observed(
-            state,
-            [
-                F.max(F.abs(F.col("rank") - F.col("prev"))).alias("delta"),
-                F.sum(F.when(~F.col("has_out"), F.col("rank")).otherwise(F.lit(0.0))).alias("dangling"),
-            ],
-            ctx,
-            it,
-        )
-        delta, dangling = float(om["delta"] or 0.0), float(om["dangling"] or 0.0)
-        if ctx is not None:
-            ctx.commit(it, active=n, delta=delta, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
-        if delta < tol:
-            break
-    return state.select("id", "rank"), it
+            agg = msgs.groupBy("dst").agg(F.sum("msg").alias("contrib"))
+            state = (
+                merge_join(state, agg, state["id"] == agg["dst"], n)
+                .select(
+                    "id",
+                    "has_out",
+                    F.col("rank").alias("prev"),
+                    ((1.0 - d) / n + d * (F.coalesce("contrib", F.lit(0.0)) + dangling / n)).alias("rank"),
+                )
+            )
+            state, delta, dangling = _materialize_delta(state, ~F.col("has_out"), ctx, it)
+            return state, {"active": n, "delta": delta}
+
+        state, it = loop.run(state, step)
+        return state.select("id", "rank"), it
 
 
 # ---------------------------------------------------------------------------
@@ -496,91 +415,55 @@ def pagerank_personalized(
         raise ValueError(
             "pagerank_personalized needs a non-empty seed set intersecting the graph's vertices"
         )
-    state = (
-        base.join(seed_set, base["id"] == seed_set["sid"], "left")
-        .select(
-            "id",
-            "outdeg",
-            F.when(F.col("sid").isNotNull(), F.lit(1.0 / n_seeds))
-            .otherwise(F.lit(0.0))
-            .alias("tele"),
-        )
-        .withColumn("rank", F.col("tele"))
-        .withColumn("prev", F.lit(0.0))
-    )
 
-    start_it = 0
-    resumed = False
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(max_iters)
-        if rp is not None:
-            start_it, state = rp
-            resumed = True
-            rec = next((m for m in reversed(ctx.metrics()) if m["superstep"] == start_it), {})
-            if rec.get("delta") is not None and rec["delta"] < tol:
-                return state.select("id", "rank"), start_it
-    if start_it == 0:
-        # the seed join is not a thin projection over the cached base —
-        # checkpoint it so superstep 1 doesn't execute it twice
-        state = materialize(state, ctx, 0) if ctx else state.localCheckpoint(eager=True)
-
-    salted, hubs = False, None
-    if hub_threshold is not None:
-        if resumed:
-            edges, salted, hubs = _hub_tagged(edges, hub_threshold)
-        else:
-            salted, hubs = pick_hub_keys(
-                state_keys=base.filter(F.col("indeg") > hub_threshold).select(F.col("id").alias("dst"))
+    with SuperstepLoop(ctx, max_iters, stop=_converged(tol)) as loop:
+        if loop.done:
+            return loop.state.select("id", "rank"), loop.start
+        state = loop.state
+        if state is None:
+            state = (
+                base.join(seed_set, base["id"] == seed_set["sid"], "left")
+                .select(
+                    "id",
+                    "outdeg",
+                    F.when(F.col("sid").isNotNull(), F.lit(1.0 / n_seeds))
+                    .otherwise(F.lit(0.0))
+                    .alias("tele"),
+                )
+                .withColumn("rank", F.col("tele"))
+                .withColumn("prev", F.lit(0.0))
             )
-            if salted:
-                edges = tag_hubs(edges, hubs)
-    prepared = prepare_gather_edges(edges, n, salted)
-    owned_cache = prepared is not edges
-    edges = prepared
+            # the seed join is not a thin projection over the cached base —
+            # checkpoint it so superstep 1 doesn't execute it twice
+            state = materialize(state, ctx, 0) if ctx else state.localCheckpoint(eager=True)
 
-    dangling = state.filter(F.col("outdeg") == 0).agg(F.sum("rank")).collect()[0][0] or 0.0
+        # resumed: no cached indeg frame — probe the edge table
+        edges, salted, hubs = _hub_tagged(edges, base if loop.state is None else None, hub_threshold)
+        loop.own(hubs)
+        prepared = prepare_gather_edges(edges, n, salted)
+        if prepared is not edges:
+            edges = loop.own(prepared)
 
-    it = start_it
-    for it in range(start_it + 1, max_iters + 1):
-        t0 = time.time()
-        st = maybe_broadcast(state, n)
-        msg_cols = [edges["dst"], (F.col("rank") / F.col("outdeg")).alias("msg")] + (
-            [edges[HUB_FLAG]] if salted else []
-        )
-        msgs = edges.join(st, edges["src"] == st["id"]).select(*msg_cols)
-        if salted:
-            agg = skewed_gather(msgs, "dst", [("sum", "msg", "contrib")], n_salts)
-        else:
-            agg = msgs.groupBy("dst").agg(F.sum("msg").alias("contrib"))
-        state = (
-            merge_join(state, agg, state["id"] == agg["dst"], n)
-            .select(
-                "id",
-                "outdeg",
-                "tele",
-                F.col("rank").alias("prev"),
-                (
-                    (1.0 - d + d * dangling) * F.col("tele")
-                    + d * F.coalesce("contrib", F.lit(0.0))
-                ).alias("rank"),
+        dangling = state.filter(F.col("outdeg") == 0).agg(F.sum("rank")).collect()[0][0] or 0.0
+
+        def step(state, it, prev):
+            nonlocal dangling
+            agg = _sum_gather(edges, state, n, F.col("rank") / F.col("outdeg"), "contrib", salted, n_salts)
+            state = (
+                merge_join(state, agg, state["id"] == agg["dst"], n)
+                .select(
+                    "id",
+                    "outdeg",
+                    "tele",
+                    F.col("rank").alias("prev"),
+                    (
+                        (1.0 - d + d * dangling) * F.col("tele")
+                        + d * F.coalesce("contrib", F.lit(0.0))
+                    ).alias("rank"),
+                )
             )
-        )
-        state, om = materialize_observed(
-            state,
-            [
-                F.max(F.abs(F.col("rank") - F.col("prev"))).alias("delta"),
-                F.sum(F.when(F.col("outdeg") == 0, F.col("rank")).otherwise(F.lit(0.0))).alias("dangling"),
-            ],
-            ctx,
-            it,
-        )
-        delta, dangling = float(om["delta"] or 0.0), float(om["dangling"] or 0.0)
-        if ctx is not None:
-            ctx.commit(it, active=n, delta=delta, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
-        if delta < tol:
-            break
-    if owned_cache:
-        edges.unpersist()
-    if hubs is not None:
-        hubs.unpersist()
-    return state.select("id", "rank"), it
+            state, delta, dangling = _materialize_delta(state, F.col("outdeg") == 0, ctx, it)
+            return state, {"active": n, "delta": delta}
+
+        state, it = loop.run(state, step)
+        return state.select("id", "rank"), it

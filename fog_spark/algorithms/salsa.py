@@ -23,11 +23,10 @@ own roadmap never reached.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
 from fog_spark.engine.superstep import (
+    SuperstepLoop,
     materialize,
     materialize_observed,
     maybe_broadcast,
@@ -63,49 +62,44 @@ def salsa(
         .localCheckpoint(eager=False)
     )
 
-    n_auth = ind.count()
-    auth0 = ind.select(F.col("dst").alias("id"), F.lit(1.0 / max(n_auth, 1)).alias("authority"))
-    state = (
-        verts.join(auth0, "id", "left")
-        .select("id", F.coalesce("authority", F.lit(0.0)).alias("authority"),
-                F.lit(0.0).alias("hub"))
-    )
-
-    start = 0
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(niters)
-        if rp is not None:
-            start, state = rp
-    if start == 0:
-        state = materialize(state, ctx, 0)
-
-    for it in range(start + 1, niters + 1):
-        t0 = time.time()
-        st = maybe_broadcast(state, n)
-        # backward pass: authority mass -> hubs, 1/indeg per in-link
-        hmsg = eb.join(st, eb["dst"] == st["id"]).select(
-            eb["src"].alias("hid"), (F.col("authority") * F.col("wb")).alias("m")
-        )
-        agg_h = hmsg.groupBy("hid").agg(F.sum("m").alias("h"))
-        # forward pass: hub mass -> authorities, 1/outdeg per out-link
-        amsg = ef.join(maybe_broadcast(agg_h, n), ef["src"] == F.col("hid")).select(
-            ef["dst"].alias("aid"), (F.col("h") * F.col("wf")).alias("m")
-        )
-        agg_a = amsg.groupBy("aid").agg(F.sum("m").alias("a"))
-        nxt = (
-            state.select("id")
-            .join(maybe_broadcast(agg_a, n), state["id"] == F.col("aid"), "left")
-            .join(maybe_broadcast(agg_h, n), state["id"] == F.col("hid"), "left")
-            .select(
-                "id",
-                F.coalesce("a", F.lit(0.0)).alias("authority"),
-                F.coalesce("h", F.lit(0.0)).alias("hub"),
+    with SuperstepLoop(ctx, niters) as loop:
+        state = loop.state
+        if state is None:
+            n_auth = ind.count()
+            auth0 = ind.select(F.col("dst").alias("id"), F.lit(1.0 / max(n_auth, 1)).alias("authority"))
+            state = (
+                verts.join(auth0, "id", "left")
+                .select("id", F.coalesce("authority", F.lit(0.0)).alias("authority"),
+                        F.lit(0.0).alias("hub"))
             )
-        )
-        state, om = materialize_observed(
-            nxt, [F.sum("authority").alias("mass")], ctx, it
-        )
-        if ctx is not None:
-            ctx.commit(it, active=n, delta=float(om["mass"] or 0.0),
-                       wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
+            state = materialize(state, ctx, 0)
+
+        def step(state, it, prev):
+            st = maybe_broadcast(state, n)
+            # backward pass: authority mass -> hubs, 1/indeg per in-link
+            hmsg = eb.join(st, eb["dst"] == st["id"]).select(
+                eb["src"].alias("hid"), (F.col("authority") * F.col("wb")).alias("m")
+            )
+            agg_h = hmsg.groupBy("hid").agg(F.sum("m").alias("h"))
+            # forward pass: hub mass -> authorities, 1/outdeg per out-link
+            amsg = ef.join(maybe_broadcast(agg_h, n), ef["src"] == F.col("hid")).select(
+                ef["dst"].alias("aid"), (F.col("h") * F.col("wf")).alias("m")
+            )
+            agg_a = amsg.groupBy("aid").agg(F.sum("m").alias("a"))
+            nxt = (
+                state.select("id")
+                .join(maybe_broadcast(agg_a, n), state["id"] == F.col("aid"), "left")
+                .join(maybe_broadcast(agg_h, n), state["id"] == F.col("hid"), "left")
+                .select(
+                    "id",
+                    F.coalesce("a", F.lit(0.0)).alias("authority"),
+                    F.coalesce("h", F.lit(0.0)).alias("hub"),
+                )
+            )
+            state, om = materialize_observed(
+                nxt, [F.sum("authority").alias("mass")], ctx, it
+            )
+            return state, {"active": n, "delta": float(om["mass"] or 0.0)}
+
+        state, _ = loop.run(state, step)
     return state.select("id", "authority", "hub")

@@ -15,17 +15,16 @@ deterministic choice, as FIXTURES.md's goldens do).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
-from fog_spark.engine.skew import HUB_DEGREE_THRESHOLD, HUB_FLAG, pick_hub_keys, skewed_gather, tag_hubs, top_degree_keys
+from fog_spark.algorithms.bfs import _frontier_preamble, _vertices_with_indeg
+from fog_spark.engine.skew import HUB_DEGREE_THRESHOLD, HUB_FLAG, skewed_gather
 from fog_spark.engine.superstep import (
+    SuperstepLoop,
     active_metric,
-    materialize,
     materialize_observed,
     merge_join,
-    prepare_gather_edges,
+    no_active,
     with_frontier_hint,
 )
 
@@ -44,95 +43,48 @@ def sssp(
     """Returns (id, dist, pred); unreached = (inf, -1). Requires a weight column."""
     fwd = edges.filter(F.col("src") != F.col("dst")).select("src", "dst", "weight")
 
-    # fused vertex set + hub-key in-degree — see bfs.py
-    if vertices is None:
-        dv = (
-            edges.select(F.col("src").alias("id"), F.lit(0).alias("_d"))
-            .unionByName(
-                edges.select(
-                    F.col("dst").alias("id"),
-                    (F.col("src") != F.col("dst")).cast("int").alias("_d"),
-                )
-            )
-            .groupBy("id")
-            .agg(F.sum("_d").alias("indeg"))
-        )
-    else:
-        dv = vertices.select("id").withColumn("indeg", F.lit(None).cast("long"))
-    state = dv.select(
+    state = _vertices_with_indeg(edges, vertices).select(
         "id",
         F.when(F.col("id") == source, F.lit(0.0)).otherwise(F.lit(float("inf"))).alias("dist"),
         F.lit(-1).cast("long").alias("pred"),
         (F.col("id") == source).alias("changed"),
         "indeg",
     )
-    start_step = 0
-    resumed = False
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(max_iters)
-        if rp is not None:
-            start_step, state = rp
-            resumed = True
-    if start_step == 0:
-        state = materialize(state, ctx, 0)
-    n_vertices = state.count()
-    active = state.filter("changed").count() if start_step else 1
+    with SuperstepLoop(ctx, max_iters, stop=no_active) as loop:
+        state, n_vertices, fwd, salted = _frontier_preamble(loop, state, fwd, vertices is not None, hub_threshold)
 
-    salted, hubs = False, None
-    if hub_threshold is not None:
-        if resumed or vertices is not None:
-            salted, hubs = pick_hub_keys(probe=top_degree_keys(fwd, "dst", hub_threshold))
-        else:
-            salted, hubs = pick_hub_keys(
-                state_keys=state.filter(F.col("indeg") > hub_threshold).select(F.col("id").alias("dst"))
+        def step(state, k, prev):
+            active = prev["active"]
+            frontier = with_frontier_hint(state.filter("changed").select("id", "dist"), active)
+            msg_cols = [
+                fwd["dst"],
+                F.struct(
+                    (F.col("dist") + F.col("weight")).alias("dist"),
+                    frontier["id"].alias("pred"),
+                ).alias("cand"),
+            ] + ([fwd[HUB_FLAG]] if salted else [])
+            msgs = fwd.join(frontier, fwd["src"] == frontier["id"]).select(*msg_cols)
+            if salted:
+                agg = skewed_gather(msgs, "dst", [("min", "cand", "cand")], n_salts)
+            else:
+                agg = msgs.groupBy("dst").agg(F.min("cand").alias("cand"))
+            absorb = (F.col("cand.dist") < F.col("dist")) & (
+                F.abs(F.col("cand.dist") - F.col("dist")) > EPS
             )
-        if salted:
-            fwd = tag_hubs(fwd, hubs)
-    if "indeg" in state.columns:
-        state = state.select("id", "dist", "pred", "changed")
-    # gather-aligned edge cache (superstep.prepare_gather_edges): zero
-    # shuffle exchanges per superstep in the broadcast-state regime
-    prepared = prepare_gather_edges(fwd, n_vertices, salted)
-    owned_cache = prepared is not fwd
-    fwd = prepared
-
-    for step in range(start_step + 1, max_iters + 1):
-        if active == 0:
-            break
-        t0 = time.time()
-        frontier = with_frontier_hint(state.filter("changed").select("id", "dist"), active)
-        msg_cols = [
-            fwd["dst"],
-            F.struct(
-                (F.col("dist") + F.col("weight")).alias("dist"),
-                frontier["id"].alias("pred"),
-            ).alias("cand"),
-        ] + ([fwd[HUB_FLAG]] if salted else [])
-        msgs = fwd.join(frontier, fwd["src"] == frontier["id"]).select(*msg_cols)
-        if salted:
-            agg = skewed_gather(msgs, "dst", [("min", "cand", "cand")], n_salts)
-        else:
-            agg = msgs.groupBy("dst").agg(F.min("cand").alias("cand"))
-        absorb = (F.col("cand.dist") < F.col("dist")) & (
-            F.abs(F.col("cand.dist") - F.col("dist")) > EPS
-        )
-        state = (
-            # fan-out guard: the agg is bounded by |V|, not frontier * 64
-            merge_join(state, agg, state["id"] == agg["dst"], min(active * 64, n_vertices))
-            .select(
-                "id",
-                F.when(absorb, F.col("cand.dist")).otherwise(F.col("dist")).alias("dist"),
-                F.when(absorb, F.col("cand.pred")).otherwise(F.col("pred")).alias("pred"),
-                F.coalesce(absorb, F.lit(False)).alias("changed"),
+            state = (
+                # fan-out guard: the agg is bounded by |V|, not frontier * 64
+                merge_join(state, agg, state["id"] == agg["dst"], min(active * 64, n_vertices))
+                .select(
+                    "id",
+                    F.when(absorb, F.col("cand.dist")).otherwise(F.col("dist")).alias("dist"),
+                    F.when(absorb, F.col("cand.pred")).otherwise(F.col("pred")).alias("pred"),
+                    F.coalesce(absorb, F.lit(False)).alias("changed"),
+                )
             )
-        )
-        state, om = materialize_observed(state, [active_metric()], ctx, step)
-        active = int(om["active"] or 0)
-        if ctx is not None:
-            ctx.commit(step, active=active, delta=None, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
+            state, om = materialize_observed(state, [active_metric()], ctx, k)
+            return state, {"active": int(om["active"] or 0), "delta": None}
 
-    if owned_cache:
-        fwd.unpersist()
-    if hubs is not None:
-        hubs.unpersist()
-    return state.select("id", "dist", "pred")
+        # fresh: the root alone; resumed: |V| bounds the frontier when the
+        # resumed step's metric record is unreadable
+        state, _ = loop.run(state, step, first={"active": 1 if loop.state is None else n_vertices})
+        return state.select("id", "dist", "pred")

@@ -24,6 +24,8 @@ Physical notes (the part FOG does by hand that Spark gives us):
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 # Below this many active vertices, hint the frontier join to broadcast
@@ -274,3 +276,87 @@ def symmetrize(edges: DataFrame, drop_self_loops: bool = True) -> DataFrame:
     if drop_self_loops:
         e = e.filter(F.col("src") != F.col("dst"))
     return e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+
+
+def no_active(rec: dict) -> bool:
+    """Stop rule of the frontier loops: the last step changed nothing."""
+    return rec["active"] == 0
+
+
+class SuperstepLoop:
+    """The superstep protocol every algorithm loop shares — FOG's one
+    scatter-gather engine with the algorithm as a vertex program
+    (fogsrc/fog_engine.cpp:91-243). Use as a context manager:
+
+    1. **Resume** (on construction). With a RunContext, continue from
+       the newest committed snapshot at or below ``max_steps``
+       (``resume_point_at_most``; the uncapped ``resume_point`` only
+       when ``max_steps`` is None). ``state``/``start`` are that
+       snapshot and its step (None/0 when fresh); ``last`` is the
+       metric record OF the resumed step — never a newer commit whose
+       snapshot was lost (read only when there is a stop rule) — and
+       ``done`` says ``stop`` already holds on it, so the caller can
+       skip its preamble.
+    2. **Loop** (``run``): steps start+1..max_steps, each timed and
+       committed with the state's lineage.
+    3. **Stop**: before every step, on ``stop(record)`` of the previous
+       step.
+    4. **Cleanup**: every cache passed to ``own`` is unpersisted on
+       exit — on success and when a step throws.
+
+    The algorithm keeps its initial state, its preamble (hub probe,
+    ``prepare_gather_edges``), the step-0 ``materialize`` and the step
+    body, so those calls stay in the algorithm's own module.
+    """
+
+    def __init__(self, ctx, max_steps: int | None, stop=None):
+        self.ctx, self.max_steps, self.stop = ctx, max_steps, stop
+        self.start, self.state, self.last = 0, None, None
+        self._owned: list[DataFrame] = []
+        if ctx is not None:
+            rp = ctx.resume_point() if max_steps is None else ctx.resume_point_at_most(max_steps)
+            if rp is not None:
+                self.start, self.state = rp
+                if stop is not None:
+                    self.last = next((m for m in reversed(ctx.metrics()) if m["superstep"] == self.start), None)
+        self.done = self._stops(self.last)
+
+    def _stops(self, rec: dict | None) -> bool:
+        return rec is not None and self.stop is not None and self.stop(rec)
+
+    def own(self, df: DataFrame | None) -> DataFrame | None:
+        """Register a cache the loop releases on exit; returns it."""
+        if df is not None:
+            self._owned.append(df)
+        return df
+
+    def __enter__(self) -> "SuperstepLoop":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        for df in reversed(self._owned):
+            df.unpersist()
+
+    def run(self, state: DataFrame, step, first: dict | None = None) -> tuple[DataFrame, int]:
+        """Run ``step(state, k, prev) -> (state, record)`` until
+        ``max_steps`` or the stop rule; returns (state, last step run).
+
+        ``record`` holds the metric fields (``active``, ``delta``, any
+        extras) committed for step k; ``prev`` is the previous step's
+        record. Before step 1 of a fresh run — and on resume when the
+        resumed step's record is unreadable — ``first`` stands in for
+        it. A step returns None instead when the loop is already at its
+        fixed point: nothing is committed and the loop ends."""
+        ctx = self.ctx
+        prev = self.last if self.last is not None else first
+        k = self.start
+        while (self.max_steps is None or k < self.max_steps) and not self._stops(prev):
+            t0 = time.time()
+            out = step(state, k + 1, prev)
+            if out is None:
+                break
+            k += 1
+            state, prev = out
+            if ctx is not None:
+                ctx.commit(k, wall_s=time.time() - t0, lineage=ctx.lineage_of(state), **prev)
+        return state, k

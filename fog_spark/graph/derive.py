@@ -5,8 +5,8 @@ process_edgelist.cpp — SNAP text to binary CSR). Our input is the
 north_rule's Iceberg-shaped table ``(repo, path, commit, lang, content)``
 and the "parse" is import/include extraction; the CSR materialization
 disappears entirely (the edge DataFrame + hash partitioning IS the
-storage format; per-partition CSR is packed at runtime inside the
-pandas-UDF kernels, see algorithms/pagerank._csr_scatter_fog).
+storage format; supersteps join it directly, see
+engine/superstep.prepare_gather_edges).
 
 Scale notes:
 - extraction runs JVM-side via regexp_extract_all (whole-stage codegen;

@@ -318,6 +318,18 @@ def test_resume_capped_at_requested_depth(spark, tmp_path):
     assert shallow == pytest.approx(plain3, rel=1e-12)
     assert any(shallow[i] != deep[i] for i in range(g.n))
 
+    # the same contract for a convergent loop: a converged cc run dir
+    # asked for one round answers with round 1, not the fixed point
+    ctx_cc = RunContext(spark, str(tmp_path), "ccDeep")
+    converged = {r["id"]: r["component"] for r in connected_components(edges, vertices, ctx=ctx_cc).collect()}
+    assert ctx_cc.last_committed()["superstep"] > 1
+    ctx_cc1 = RunContext(spark, str(tmp_path), "ccDeep")
+    capped = {r["id"]: r["component"]
+              for r in connected_components(edges, vertices, max_iters=1, ctx=ctx_cc1).collect()}
+    one_round = {r["id"]: r["component"] for r in connected_components(edges, vertices, max_iters=1).collect()}
+    assert capped == one_round
+    assert capped != converged
+
     # retention dropped the requested step -> loud failure, not a
     # silently deeper answer
     ctx3 = RunContext(spark, str(tmp_path), "runVac", keep_last=2)
@@ -325,3 +337,26 @@ def test_resume_capped_at_requested_depth(spark, tmp_path):
     ctx4 = RunContext(spark, str(tmp_path), "runVac", keep_last=2)
     with pytest.raises(ValueError, match="vacuumed"):
         pagerank_fog(edges, vertices, niters=3, ctx=ctx4)
+
+
+def test_lpa_resume_past_lost_snapshots_is_not_converged(spark, tmp_path):
+    """Convergence is read off the metric record OF the resumed step: with
+    the two newest snapshots lost, resume walks back to a step that had
+    not converged yet and must continue to the fixed point, not return
+    that older state because the newest record says active == 0."""
+    from fog_spark.algorithms import label_propagation
+
+    g = GRAPHS["g_er_n100"]
+    edges = graph_to_spark(spark, g)
+    vertices = spark.range(g.n).select("id")
+    ctx = RunContext(spark, str(tmp_path), "lpaLost")
+    clean = {r["id"]: r["label"] for r in label_propagation(edges, vertices, ctx=ctx).collect()}
+    last = ctx.last_committed()
+    assert last["active"] == 0 and last["superstep"] >= 3  # fixed point, 2 steps to lose
+
+    for step in (last["superstep"], last["superstep"] - 1):
+        ctx.fmt.delete_partition("state", step)
+    ctx2 = RunContext(spark, str(tmp_path), "lpaLost")
+    assert ctx2.resume_point()[0] == last["superstep"] - 2
+    resumed = {r["id"]: r["label"] for r in label_propagation(edges, vertices, ctx=ctx2).collect()}
+    assert resumed == clean
