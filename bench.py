@@ -2,7 +2,8 @@
 
 Runs the north-rule algorithm suite on the part co-occurrence link
 graph derived from $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-plus the pipeline headliners, on local[$SPARK_GRAFT_CPUS].
+plus the pipeline headliners, on local[$SPARK_GRAFT_CPUS] (default: the
+CPUs this process may run on, session.DEFAULT_CPUS).
 
 Prints exactly one JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
@@ -29,7 +30,7 @@ from fog_spark.algorithms.pagerank import pagerank_standard
 from fog_spark.algorithms.triangles import triangle_total
 from fog_spark.datapipe.dedup import minhash_lsh_candidates
 from fog_spark.queries import cooccur_edges, load
-from fog_spark.session import get_spark
+from fog_spark.session import DEFAULT_CPUS, get_spark
 
 
 from fog_spark.benchutil import BoxMeter, foreign_busy_pct
@@ -44,7 +45,7 @@ _FLOORS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_F
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_CPUS
 
     floors: dict[str, float] = {}
     try:

@@ -26,6 +26,8 @@ loops are frontier supersteps bounded by graph diameter.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, functions as F
 
 from fog_spark.engine.superstep import (
@@ -67,6 +69,46 @@ def _hash_min_fixed_point(edges: DataFrame, vertices: DataFrame, max_iters: int 
         state, om = materialize_observed(state, [active_metric()])
         active = int(om["active"] or 0)
     return state.select("id", "lbl")
+
+
+def _confirm_backward(edges: DataFrame, fwd: DataFrame, max_waves: int | None = None) -> DataFrame:
+    """(id, lbl, confirmed): roots (id == fwd label) confirm themselves,
+    then confirmation spreads along REVERSED edges whose endpoints share
+    a forward label, one frontier wave per superstep — to the fixed
+    point, or for at most ``max_waves`` waves."""
+    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    lbl_src = fwd.select(F.col("id").alias("src"), F.col("lbl").alias("ls"))
+    lbl_dst = fwd.select(F.col("id").alias("dst"), F.col("lbl").alias("ld"))
+    rev_same = materialize(
+        rev.join(lbl_src, "src").join(lbl_dst, "dst").filter("ls = ld").select("src", "dst")
+    )
+    conf = fwd.select(
+        "id", "lbl",
+        (F.col("id") == F.col("lbl")).alias("confirmed"),
+        (F.col("id") == F.col("lbl")).alias("is_new"),
+    )
+    conf, om = materialize_observed(conf, [active_metric("is_new")])
+    frontier_n = int(om["active"] or 0)
+    for _ in itertools.count() if max_waves is None else range(max_waves):
+        if frontier_n == 0:
+            break
+        # ONE materialized job per wave: the next frontier (is_new)
+        # and its size ride the same frame/observation as the
+        # confirmed update, instead of a second count job
+        fr = with_frontier_hint(
+            conf.filter("is_new").select(F.col("id").alias("src")), frontier_n
+        )
+        reached = rev_same.join(fr, "src", "left_semi").select(F.col("dst").alias("id")).distinct()
+        conf = conf.join(
+            reached.withColumn("c2", F.lit(True)), "id", "left"
+        ).select(
+            "id", "lbl",
+            (F.col("confirmed") | F.coalesce("c2", F.lit(False))).alias("confirmed"),
+            (~F.col("confirmed") & F.coalesce("c2", F.lit(False))).alias("is_new"),
+        )
+        conf, om = materialize_observed(conf, [active_metric("is_new")])
+        frontier_n = int(om["active"] or 0)
+    return conf.select("id", "lbl", "confirmed")
 
 
 def strongly_connected_components(
@@ -115,36 +157,7 @@ def strongly_connected_components(
         fwd = _hash_min_fixed_point(sub, remaining)
 
         # 3. backward confirmation within equal-label islands
-        rev = sub.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        lbl_src = fwd.select(F.col("id").alias("src"), F.col("lbl").alias("ls"))
-        lbl_dst = fwd.select(F.col("id").alias("dst"), F.col("lbl").alias("ld"))
-        rev_same = materialize(
-            rev.join(lbl_src, "src").join(lbl_dst, "dst").filter("ls = ld").select("src", "dst")
-        )
-        conf = fwd.select(
-            "id", "lbl",
-            (F.col("id") == F.col("lbl")).alias("confirmed"),
-            (F.col("id") == F.col("lbl")).alias("is_new"),
-        )
-        conf, om = materialize_observed(conf, [active_metric("is_new")])
-        frontier_n = int(om["active"] or 0)
-        while frontier_n > 0:
-            # ONE materialized job per wave: the next frontier (is_new)
-            # and its size ride the same frame/observation as the
-            # confirmed update, instead of a second count job
-            fr = with_frontier_hint(
-                conf.filter("is_new").select(F.col("id").alias("src")), frontier_n
-            )
-            reached = rev_same.join(fr, "src", "left_semi").select(F.col("dst").alias("id")).distinct()
-            conf = conf.join(
-                reached.withColumn("c2", F.lit(True)), "id", "left"
-            ).select(
-                "id", "lbl",
-                (F.col("confirmed") | F.coalesce("c2", F.lit(False))).alias("confirmed"),
-                (~F.col("confirmed") & F.coalesce("c2", F.lit(False))).alias("is_new"),
-            )
-            conf, om = materialize_observed(conf, [active_metric("is_new")])
-            frontier_n = int(om["active"] or 0)
+        conf = _confirm_backward(sub, fwd)
 
         done = conf.filter("confirmed").select("id", F.col("lbl").alias("component"))
         done = materialize(done)

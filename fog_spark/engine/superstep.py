@@ -15,9 +15,9 @@ Physical notes (the part FOG does by hand that Spark gives us):
   combine, cpu_thread.cpp:295-306). Spark's partial hash aggregation is
   a strict improvement we get for free — the shuffle carries one partial
   per (map partition, dst), not one row per edge.
-- Pre-shuffling the edge table once by join key and caching it
-  (``prepare_edges``) keeps the big side of the scatter join exchange-free
-  across all supersteps: only the small state/frontier side moves.
+- Partitioning the edge table once by the gather key and caching it
+  (``prepare_gather_edges``) keeps every superstep exchange-free when the
+  state broadcasts: only the small state/frontier side moves.
 - Iterative plans MUST cut lineage every superstep (``materialize``) or
   the logical plan doubles per iteration and the driver melts.
 """
@@ -72,20 +72,6 @@ def merge_join(state: DataFrame, agg: DataFrame, cond, est_rows: int | None) -> 
     return state.join(agg.hint("shuffle_hash"), cond, "left")
 
 
-def prepare_edges(edges: DataFrame, key: str = "src", partitions: int | None = None) -> DataFrame:
-    """Hash-partition the edge table by the scatter join key and cache it.
-
-    At cluster scale this is the moral equivalent of bucketing the edges
-    table: every superstep's state⨝edges sort-merge join then reuses the
-    cached partitioning and only exchanges the (much smaller) state side.
-    """
-    spark = edges.sparkSession
-    n = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    out = edges.repartition(n, key).persist()
-    out.count()  # materialize the cache eagerly
-    return out
-
-
 def prepare_gather_edges(
     edges: DataFrame,
     n_state: int | None,
@@ -108,10 +94,9 @@ def prepare_gather_edges(
       to the edges), exactly the pre-alignment plan. Salted gathers
       must NOT be dst-aligned — reusing a hash(dst) partitioning would
       put every salt bucket of a hub back on one partition,
-      neutralizing the salt. (Callers that want src-bucketing for the
-      big-state sort-merge regime call ``prepare_edges`` themselves —
-      re-exchanging an input the caller may already have partitioned
-      would pay |E| for nothing.)
+      neutralizing the salt. (No src-bucketing for the big-state
+      sort-merge regime either — re-exchanging an input the caller may
+      already have partitioned would pay |E| for nothing.)
 
     **Amortization guard**: the dst alignment costs one full |E|-row
     exchange up front, while each superstep it saves only the gather's

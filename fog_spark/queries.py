@@ -7,13 +7,18 @@ semantics:
 - a PySpark callable ``(spark, sf_dir) -> DataFrame``;
 - an ANSI-SQL string DuckDB runs on the same parquet tables.
 
+Where the library ships the operator (``fog_spark.algorithms``,
+``fog_spark.datapipe``), the Spark callable IS a call into it plus the
+column renames and rounding its oracle expects — so the oracle gate
+certifies the code library users run, not a private copy of it.
+
 The driver hashes values order-insensitively after sorting columns by
 name, so both sides alias every column identically and round every
 float at the same decimal place. Iterative algorithms are expressed as
-FIXED-round unrolled recursions (k rounds in the Spark loop == k
-chained CTEs in SQL) so the comparison never depends on convergence
-behavior; convergence-to-fixed-point is covered by the pytest oracle
-suite instead.
+FIXED-round unrolled recursions (a library loop capped at k supersteps
+== k chained CTEs in SQL) so the comparison never depends on
+convergence behavior; convergence-to-fixed-point is covered by the
+pytest oracle suite instead.
 
 The link graph used by the graph queries is the part co-occurrence
 graph: parts appearing in the same order are connected (both
@@ -27,8 +32,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-
-from fog_spark.engine.superstep import materialize
 
 # ---------------------------------------------------------------------------
 # shared inputs
@@ -138,20 +141,10 @@ PR_ROUNDS = 3
 
 def q_pagerank_fog_k3(spark, sf_dir):
     """FOG-mode accumulating PageRank, 3 fixed rounds (SURVEY §2.8)."""
-    edges = cooccur_edges(spark, sf_dir).persist()
-    deg = edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("outdeg"))
-    state = deg.withColumn("rank", F.lit(1.0))
-    for _ in range(PR_ROUNDS):
-        msgs = edges.join(state, edges["src"] == state["id"]).select(
-            edges["dst"], (0.85 * F.col("rank") / F.col("outdeg") + 0.15).alias("m")
-        )
-        agg = msgs.groupBy("dst").agg(F.sum("m").alias("s"))
-        state = state.join(agg, state["id"] == agg["dst"], "left").select(
-            "id", "outdeg", (F.col("rank") + F.coalesce("s", F.lit(0.0))).alias("rank")
-        )
-        state = materialize(state)
-    edges.unpersist()
-    return state.select("id", F.round("rank", 5).alias("rank_r"))
+    from fog_spark.algorithms.pagerank import pagerank_fog
+
+    ranks = pagerank_fog(cooccur_edges(spark, sf_dir), niters=PR_ROUNDS)
+    return ranks.select("id", F.round("rank", 5).alias("rank_r"))
 
 
 def _sql_pagerank(k: int) -> str:
@@ -176,20 +169,9 @@ def q_cc_hashmin(spark, sf_dir):
     """Hash-min connected components, 12 fixed rounds (converged at this
     scale — tests assert the fixed point; the SQL mirror runs the same
     12 rounds so the comparison is convergence-independent)."""
-    edges = cooccur_edges(spark, sf_dir).select("src", "dst").persist()
-    state = edges.select(F.col("src").alias("id")).distinct().withColumn("comp", F.col("id"))
-    for _ in range(CC_ROUNDS):
-        agg = (
-            edges.join(state, edges["src"] == state["id"])
-            .groupBy("dst")
-            .agg(F.min("comp").alias("mc"))
-        )
-        state = state.join(agg, state["id"] == agg["dst"], "left").select(
-            "id", F.least("comp", F.coalesce("mc", F.col("comp"))).alias("comp")
-        )
-        state = materialize(state)
-    edges.unpersist()
-    return state.select("id", F.col("comp").alias("component"))
+    from fog_spark.algorithms.cc import connected_components
+
+    return connected_components(cooccur_edges(spark, sf_dir), max_iters=CC_ROUNDS)
 
 
 def _sql_cc(k: int) -> str:
@@ -209,25 +191,9 @@ LPA_ROUNDS = 2
 def q_lpa_k2(spark, sf_dir):
     """Synchronous label propagation, 2 fixed rounds; mode gather with
     smallest-label tie-break (SURVEY §2.8 LPA semantics)."""
-    edges = cooccur_edges(spark, sf_dir).select("src", "dst").persist()
-    state = edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    for _ in range(LPA_ROUNDS):
-        counts = (
-            edges.join(state, edges["src"] == state["id"])
-            .groupBy("dst", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        best = (
-            counts.groupBy("dst")
-            .agg(F.min(F.struct((-F.col("cnt")).alias("n"), F.col("label").alias("l"))).alias("b"))
-            .select("dst", F.col("b.l").alias("nl"))
-        )
-        state = state.join(best, state["id"] == best["dst"], "left").select(
-            "id", F.coalesce("nl", F.col("label")).alias("label")
-        )
-        state = materialize(state)
-    edges.unpersist()
-    return state.select("id", "label")
+    from fog_spark.algorithms.lpa import label_propagation
+
+    return label_propagation(cooccur_edges(spark, sf_dir), max_iters=LPA_ROUNDS)
 
 
 def _lpa_ctes(k: int) -> list[str]:
@@ -354,28 +320,17 @@ BFS_ROUNDS = 4
 BFS_SENTINEL = 4294967295  # application/bfs.hpp:48
 
 
+def _min_src(edges: DataFrame) -> int:
+    """The traversal root of bfs_k4/sssp_k4: the minimum source id."""
+    return edges.agg(F.min("src")).collect()[0][0]
+
+
 def q_bfs_k4(spark, sf_dir):
     """BFS from the min vertex id, 4 fixed rounds, u32 sentinel."""
-    edges = cooccur_edges(spark, sf_dir).select("src", "dst").persist()
-    verts = edges.select(F.col("src").alias("id")).distinct()
-    root = verts.agg(F.min("id")).collect()[0][0]
-    state = verts.select(
-        "id",
-        F.when(F.col("id") == root, F.lit(0)).otherwise(F.lit(BFS_SENTINEL)).cast("long").alias("level"),
-    )
-    for _ in range(BFS_ROUNDS):
-        agg = (
-            edges.join(state, edges["src"] == state["id"])
-            .where(F.col("level") < BFS_SENTINEL)
-            .groupBy("dst")
-            .agg(F.min(F.col("level") + 1).alias("cand"))
-        )
-        state = state.join(agg, state["id"] == agg["dst"], "left").select(
-            "id", F.least("level", F.coalesce("cand", F.col("level"))).alias("level")
-        )
-        state = materialize(state)
-    edges.unpersist()
-    return state.select("id", "level")
+    from fog_spark.algorithms.bfs import bfs_levels
+
+    edges = cooccur_edges(spark, sf_dir)
+    return bfs_levels(edges, root=_min_src(edges), max_iters=BFS_ROUNDS)
 
 
 def _sql_bfs(k: int) -> str:
@@ -399,27 +354,14 @@ SSSP_SENTINEL = 1.0e18
 
 
 def q_sssp_k4(spark, sf_dir):
-    """Bellman-Ford distances from min vertex, 4 fixed rounds, weighted."""
-    edges = cooccur_edges(spark, sf_dir).persist()
-    verts = edges.select(F.col("src").alias("id")).distinct()
-    root = verts.agg(F.min("id")).collect()[0][0]
-    state = verts.select(
-        "id",
-        F.when(F.col("id") == root, F.lit(0.0)).otherwise(F.lit(SSSP_SENTINEL)).alias("dist"),
-    )
-    for _ in range(SSSP_ROUNDS):
-        agg = (
-            edges.join(state, edges["src"] == state["id"])
-            .where(F.col("dist") < 1.0e17)
-            .groupBy("dst")
-            .agg(F.min(F.col("dist") + F.col("weight")).alias("cand"))
-        )
-        state = state.join(agg, state["id"] == agg["dst"], "left").select(
-            "id", F.least("dist", F.coalesce("cand", F.col("dist"))).alias("dist")
-        )
-        state = materialize(state)
-    edges.unpersist()
-    return state.select("id", F.round("dist", 4).alias("dist_r"))
+    """Bellman-Ford distances from min vertex, 4 fixed rounds, weighted;
+    unreached vertices carry SSSP_SENTINEL."""
+    from fog_spark.algorithms.sssp import sssp
+
+    edges = cooccur_edges(spark, sf_dir)
+    dist = sssp(edges, source=_min_src(edges), max_iters=SSSP_ROUNDS)
+    finite = F.when(F.col("dist") == float("inf"), F.lit(SSSP_SENTINEL)).otherwise(F.col("dist"))
+    return dist.select("id", F.round(finite, 4).alias("dist_r"))
 
 
 def _sql_sssp(k: int) -> str:
@@ -440,11 +382,9 @@ def _sql_sssp(k: int) -> str:
 
 def q_spmv(spark, sf_dir):
     """One scatter-gather: y(v) = Σ_{u→v} x(u)·w(u,v), x ≡ 1 (SURVEY §2.8 SpMV)."""
-    edges = cooccur_edges(spark, sf_dir)
-    return (
-        edges.groupBy(F.col("dst").alias("id"))
-        .agg(F.round(F.sum("weight"), 5).alias("y_r"))
-    )
+    from fog_spark.algorithms.spmv import spmv
+
+    return spmv(cooccur_edges(spark, sf_dir)).select("id", F.round("spmv_value", 5).alias("y_r"))
 
 
 SQL_SPMV = f"WITH {EDGES_CTE} SELECT dst AS id, round(sum(weight), 5) AS y_r FROM edges GROUP BY dst"
@@ -535,17 +475,25 @@ SQL_DOC_FINGERPRINT = (
 N_MINHASH = 4
 
 
+def _md5_hash(i: int, c):
+    """The portable minhash family ``md5(i || ':' || shingle)`` — the
+    ``hash_fn`` of datapipe/dedup.minhash_signatures that DuckDB replays."""
+    return F.md5(F.concat(F.lit(f"{i}:"), c))
+
+
 def q_minhash_signatures(spark, sf_dir):
     """MinHash signatures over token sets: mh_i = min(md5(i || ':' || token)).
 
     md5-hex string min is portable across engines — no engine-specific
     integer hash anywhere.
     """
-    toks = doc_tokens(spark, sf_dir).distinct()
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("t")))).alias(f"mh{i}") for i in range(N_MINHASH)
-    ]
-    return toks.groupBy("doc_id").agg(*aggs)
+    from fog_spark.datapipe import dedup
+
+    toks = dedup.tokens(load(spark, sf_dir, "documents"))
+    sig = dedup.minhash_signatures(toks, k=N_MINHASH, hash_fn=_md5_hash)
+    return sig.select(
+        F.col("id").alias("doc_id"), *[F.col(f"mh_{i}").alias(f"mh{i}") for i in range(N_MINHASH)]
+    )
 
 
 SQL_MINHASH_SIGNATURES = f"""
@@ -580,25 +528,10 @@ JACCARD_THRESHOLD = 0.8
 
 def q_token_jaccard_pairs(spark, sf_dir):
     """N-gram(1) Jaccard near-dup pairs ≥ 0.8 via token-join (dedup op)."""
-    toks = doc_tokens(spark, sf_dir).distinct()
-    sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    ta = toks.select(F.col("doc_id").alias("a"), "t")
-    tb = toks.select(F.col("doc_id").alias("b"), "t")
-    common = (
-        ta.join(tb, "t")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("b"), F.col("n").alias("nb"))
-    return (
-        common.join(sa, "a")
-        .join(sb, "b")
-        .withColumn("j", F.col("c") / (F.col("na") + F.col("nb") - F.col("c")))
-        .where(F.col("j") >= JACCARD_THRESHOLD)
-        .select(F.col("a").alias("a_id"), F.col("b").alias("b_id"), F.round("j", 6).alias("jaccard_r"))
-    )
+    from fog_spark.datapipe.dedup import ngram_jaccard_pairs
+
+    pairs = ngram_jaccard_pairs(load(spark, sf_dir, "documents"), threshold=JACCARD_THRESHOLD, ngram=1)
+    return pairs.select("a_id", "b_id", F.round("jaccard", 6).alias("jaccard_r"))
 
 
 SQL_TOKEN_JACCARD_PAIRS = f"""
@@ -798,32 +731,16 @@ SELECT id AS doc_id, cluster_id, (id = cluster_id)::INT AS canon FROM cc
 
 
 def q_embedding_knn_top1(spark, sf_dir):
-    """Brute-force cosine nearest neighbor (similarity-search baseline).
+    """Brute-force cosine nearest neighbor (similarity-search baseline,
+    datapipe/similarity.brute_force_topk).
 
-    Double-cast sequential dot product matches DuckDB's list_dot_product
-    fold order, so cosines agree bitwise before rounding.
+    Its double-cast sequential dot product matches DuckDB's
+    list_dot_product fold order, so cosines agree bitwise before rounding.
     """
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    dot = lambda u, v: F.aggregate(  # noqa: E731
-        F.zip_with(u, v, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    n = e.select("vec_id", "embedding", F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm"))
-    a = n.select(F.col("vec_id").alias("a_id"), F.col("embedding").alias("ae"), F.col("nrm").alias("an"))
-    b = n.select(F.col("vec_id").alias("b_id"), F.col("embedding").alias("be"), F.col("nrm").alias("bn"))
-    pairs = a.crossJoin(b).where(F.col("a_id") != F.col("b_id"))
-    cos = pairs.select(
-        "a_id", "b_id", (dot(F.col("ae"), F.col("be")) / (F.col("an") * F.col("bn"))).alias("cos")
-    )
-    best = cos.groupBy("a_id").agg(
-        F.min(F.struct((-F.col("cos")).alias("nc"), F.col("b_id").alias("bb"))).alias("m")
-    )
-    return best.select(
-        F.col("a_id").alias("vec_id"),
-        F.col("m.bb").alias("nn_id"),
-        F.round(-F.col("m.nc"), 6).alias("cos_r"),
-    )
+    from fog_spark.datapipe.similarity import brute_force_topk
+
+    top = brute_force_topk(load(spark, sf_dir, "embeddings"), k=1)
+    return top.select(F.col("query_id").alias("vec_id"), "nn_id", F.round("cos", 6).alias("cos_r"))
 
 
 SQL_EMBEDDING_KNN_TOP1 = """
@@ -1032,21 +949,13 @@ SELECT doc_id, ({bits})::BIGINT AS simhash16 FROM per
 
 def q_ngram3_stats(spark, sf_dir):
     """Word-trigram shingle stats (the n-gram machinery behind n-gram
-    Jaccard dedup), engine-portable via sequence+transform."""
-    arr = F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-    docs = load(spark, sf_dir, "documents").select("doc_id", arr.alias("ts"))
-    # guard short docs: sequence(1, 0) would DESCEND in Spark (DuckDB's
-    # generate_series(1, 0) is empty) — both sides must emit no shingles
-    ng = F.when(
-        F.size("ts") >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size("ts") - 2),
-            lambda i: F.concat_ws(" ", F.element_at("ts", i), F.element_at("ts", i + 1), F.element_at("ts", i + 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    shingled = docs.select("doc_id", F.explode(ng).alias("g"))
-    return shingled.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_shingles"), F.countDistinct("g").alias("n_unique_shingles")
+    Jaccard dedup, datapipe/dedup.word_ngrams): shingles and distinct
+    shingles per document; documents under 3 tokens have no row."""
+    from fog_spark.datapipe.dedup import word_ngrams
+
+    shingled = word_ngrams(load(spark, sf_dir, "documents"), 3)
+    return shingled.groupBy(F.col("id").alias("doc_id")).agg(
+        F.count(F.lit(1)).alias("n_shingles"), F.countDistinct("t").alias("n_unique_shingles")
     )
 
 
@@ -1079,26 +988,10 @@ FROM events
 
 def q_embedding_knn_top3(spark, sf_dir):
     """Exact top-3 cosine neighbors (similarity-search coverage beyond top-1)."""
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    dot = lambda u, v: F.aggregate(  # noqa: E731
-        F.zip_with(u, v, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    n = e.select("vec_id", "embedding", F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm"))
-    a = n.select(F.col("vec_id").alias("a_id"), F.col("embedding").alias("ae"), F.col("nrm").alias("an"))
-    b = n.select(F.col("vec_id").alias("b_id"), F.col("embedding").alias("be"), F.col("nrm").alias("bn"))
-    cos = (
-        a.crossJoin(b)
-        .where(F.col("a_id") != F.col("b_id"))
-        .select("a_id", "b_id", (dot(F.col("ae"), F.col("be")) / (F.col("an") * F.col("bn"))).alias("cos"))
-    )
-    w = Window.partitionBy("a_id").orderBy(F.desc("cos"), F.asc("b_id"))
-    return (
-        cos.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 3)
-        .select(F.col("a_id").alias("vec_id"), F.col("rnk").alias("rnk"), F.col("b_id").alias("nn_id"))
-    )
+    from fog_spark.datapipe.similarity import brute_force_topk
+
+    top = brute_force_topk(load(spark, sf_dir, "embeddings"), k=3)
+    return top.select(F.col("query_id").alias("vec_id"), F.col("rank").alias("rnk"), "nn_id")
 
 
 SQL_EMBEDDING_KNN_TOP3 = """
@@ -1213,47 +1106,18 @@ def q_scc_fwbw_k6(spark, sf_dir):
       stay singletons — the state after the reference's first outer
       round; full fixed-point peeling is pytest-oracled vs Tarjan in
       tests/test_scc.py on the library implementation).
-    """
-    edges = directed_edges(spark, sf_dir).persist()
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    state = verts.select("id", F.col("id").alias("lbl"))
-    for _ in range(SCC_FWD_ROUNDS):
-        agg = (
-            edges.join(state, edges["src"] == state["id"])
-            .groupBy("dst")
-            .agg(F.min("lbl").alias("m"))
-        )
-        state = state.join(agg, state["id"] == agg["dst"], "left").select(
-            "id", F.least("lbl", F.coalesce("m", F.col("lbl"))).alias("lbl")
-        )
-        state = materialize(state)
 
-    ls = state.select(F.col("id").alias("src"), F.col("lbl").alias("ls"))
-    ld = state.select(F.col("id").alias("dst"), F.col("lbl").alias("ld"))
-    rev_same = (
-        edges.join(ls, "src").join(ld, "dst")
-        .where(F.col("ls") == F.col("ld"))
-        .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    rev_same = materialize(rev_same)
-    conf = state.select("id", "lbl", (F.col("id") == F.col("lbl")).alias("conf"))
-    for _ in range(SCC_BWD_ROUNDS):
-        reach = (
-            rev_same.join(conf.where("conf"), rev_same["src"] == F.col("id"))
-            .select(rev_same["dst"].alias("rid"))
-            .distinct()
-        )
-        conf = conf.join(reach, conf["id"] == F.col("rid"), "left").select(
-            "id", "lbl", (F.col("conf") | F.col("rid").isNotNull()).alias("conf")
-        )
-        conf = materialize(conf)
-    edges.unpersist()
+    Both passes are the library's own (algorithms/scc), capped at the
+    fixed superstep counts.
+    """
+    from fog_spark.algorithms import scc
+    from fog_spark.engine.superstep import vertices_of
+
+    edges = directed_edges(spark, sf_dir)
+    fwd = scc._hash_min_fixed_point(edges, vertices_of(edges), max_iters=SCC_FWD_ROUNDS)
+    conf = scc._confirm_backward(edges, fwd, max_waves=SCC_BWD_ROUNDS)
     return conf.select(
-        "id", F.when(F.col("conf"), F.col("lbl")).otherwise(F.col("id")).alias("scc_id")
+        "id", F.when(F.col("confirmed"), F.col("lbl")).otherwise(F.col("id")).alias("scc_id")
     )
 
 
@@ -1923,11 +1787,10 @@ def q_dedup_pipeline(spark, sf_dir):
     )
 
     docs = load(spark, sf_dir, "documents")
-    md5_hash = lambda i, c: F.md5(F.concat(F.lit(f"{i}:"), c))  # noqa: E731
     md5_band = lambda b, cols: F.md5(F.concat_ws("|", F.lit(b), *cols))  # noqa: E731
     cands = minhash_lsh_candidates(
         docs, k=PIPE_MINHASH_K, bands=PIPE_BANDS, ngram=3,
-        max_bucket=PIPE_MAX_BUCKET, hash_fn=md5_hash, band_fn=md5_band,
+        max_bucket=PIPE_MAX_BUCKET, hash_fn=_md5_hash, band_fn=md5_band,
     )
     pairs = ngram_jaccard_pairs(docs, threshold=JACCARD_THRESHOLD, ngram=3, candidates=cands)
     clusters = near_dup_clusters(docs, pairs.select("a_id", "b_id"))
@@ -4828,23 +4691,15 @@ def q_repo_pagerank_top(spark, sf_dir):
     resolution) -> 3 rounds of FOG-mode PageRank -> top-3 files per
     repository (ranked on round(rank,5), path tie-break). Everything
     the north_rule names, end to end, hash-checked against the SQL
-    replay."""
+    replay. The ranked vertex set is the files that reference another
+    file (edge sources), as in the oracle."""
+    from fog_spark.algorithms.pagerank import pagerank_fog
     from fog_spark.graph.derive import derive_graph
 
     g = derive_graph(repo_table(spark, sf_dir))
-    edges = g.edges.select("src", "dst").persist()
-    deg = edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("outdeg"))
-    state = deg.withColumn("rank", F.lit(1.0))
-    for _ in range(PR_ROUNDS):
-        msgs = edges.join(state, edges["src"] == state["id"]).select(
-            edges["dst"], (0.85 * F.col("rank") / F.col("outdeg") + 0.15).alias("m")
-        )
-        agg = msgs.groupBy("dst").agg(F.sum("m").alias("s"))
-        state = state.join(agg, state["id"] == agg["dst"], "left").select(
-            "id", "outdeg", (F.col("rank") + F.coalesce("s", F.lit(0.0))).alias("rank")
-        )
-        state = materialize(state)
-    edges.unpersist()
+    edges = g.edges.select("src", "dst")
+    sources = edges.select(F.col("src").alias("id")).distinct()
+    state = pagerank_fog(edges, vertices=sources, niters=PR_ROUNDS)
     fx = g.files.select(F.col("id").alias("fid"), "repo", "path")
     ranked = state.join(fx, state["id"] == fx["fid"]).select(
         "repo", "path", F.round("rank", 5).alias("rank_r")

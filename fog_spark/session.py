@@ -12,7 +12,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# sized from the host: the CPUs this process may run on, and half of
+# physical memory for the driver heap (local mode runs every task in it);
+# SPARK_GRAFT_CPUS / FOGSPARK_DRIVER_MEM override
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def _half_host_memory() -> str:
+    """Half of the host's physical memory (MemTotal) as a JVM size."""
+    return f"{os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') // 2 >> 20}m"
 
 
 def get_spark(
@@ -44,7 +52,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # modest heap: local-mode shuffles at bench scale fit easily, and
         # smaller heaps keep G1 cycles (and the ContextCleaner) fast
-        .config("spark.driver.memory", os.environ.get("FOGSPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("FOGSPARK_DRIVER_MEM") or _half_host_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Spark frees shuffle files / broadcasts / checkpoint RDDs only when
